@@ -26,9 +26,9 @@ def in_flight_round() -> int:
     CORRECTNESS_r{N}.json committed at git HEAD. Driver correctness
     records only enter history in the end-of-round commit, so every
     bench run inside round N sees max(committed N') = N-1, whether or
-    not the round's flip has bumped DRIVER_PRIORITY_ROUND yet and
-    whether or not uncommitted artifacts sit in the worktree. Falls
-    back to a worktree scan (same rule) when git is unavailable."""
+    not uncommitted artifacts sit in the worktree. Falls back to a
+    worktree scan (same rule) when git is unavailable, and to round 1
+    when no record exists at all."""
     import re
     import subprocess
 
@@ -48,7 +48,7 @@ def in_flight_round() -> int:
         for n in names
         if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", n.strip()))
     ]
-    return (max(rounds) + 1) if rounds else registry.DRIVER_PRIORITY_ROUND
+    return (max(rounds) + 1) if rounds else 1
 
 
 def committed_at_head(fname: str) -> bool:
@@ -442,11 +442,10 @@ def main() -> None:
     # complete map to BENCH_FULL_r{N}.json (committed, N = the
     # IN-FLIGHT round) keeps round-over-round per-query history
     # recoverable from the tree alone; tools/bench_compare.load_bench
-    # reads it directly. N is derived from git history, NOT from
-    # DRIVER_PRIORITY_ROUND: round 10 ran bench with the window
-    # constant unbumped and silently overwrote the committed
-    # BENCH_FULL_r09.json with round-10 numbers (VERDICT r10 hygiene
-    # finding #2). The in-flight round is 1 + the newest
+    # reads it directly. N is derived from git history: round 10 took
+    # it from a hand-bumped constant and silently overwrote the
+    # committed BENCH_FULL_r09.json with round-10 numbers (VERDICT r10
+    # hygiene finding #2). The in-flight round is 1 + the newest
     # CORRECTNESS_r{N}.json committed at HEAD — driver correctness
     # records land in the end-of-round commit, strictly after every
     # bench run of their round, so the derivation is stable for the

@@ -75,6 +75,10 @@ class BytePairEncoder:
     # entries is a few tens of MB worst case — enough to cover any
     # natural-language working set while bounding executor memory.
     _COUNT_MEMO_MAX = 1 << 18
+    # Longer pieces (long letter or whitespace runs, e.g. base64
+    # blobs) rarely repeat, and caching them would leave the memo's
+    # key bytes unbounded under the entry cap.
+    _COUNT_MEMO_PIECE_MAX = 64
 
     def __init__(self, ranks: dict[bytes, int], pattern: str = CL100K_PATTERN):
         self.ranks = ranks
@@ -142,9 +146,10 @@ class BytePairEncoder:
         pieces repeat heavily (words), so a piece→count dict collapses
         the merge loop to a lookup for every repeat — the guide §4.5
         heavyweight-state-per-task pattern applied to the merge work
-        itself. The memo is bounded (``_COUNT_MEMO_MAX``) and the
-        value is exactly ``len(self.encode(text))`` whether or not a
-        piece is cached (round-15 optimization; property-pinned in
+        itself. The memo is bounded in entries (``_COUNT_MEMO_MAX``)
+        and in key length (``_COUNT_MEMO_PIECE_MAX``), and the value
+        is exactly ``len(self.encode(text))`` whether or not a piece
+        is cached (round-15 optimization; property-pinned in
         tests/test_bpe.py)."""
         memo = self._count_memo
         if memo is None:
@@ -160,7 +165,10 @@ class BytePairEncoder:
                     c = 1
                 else:
                     c = len(self._merge_piece(pb))
-                if len(memo) < self._COUNT_MEMO_MAX:
+                if (
+                    len(piece) <= self._COUNT_MEMO_PIECE_MAX
+                    and len(memo) < self._COUNT_MEMO_MAX
+                ):
                     memo[piece] = c
             total += c
         return total

@@ -1,12 +1,6 @@
 """Round-10 registered surface — 50 oracle-backed analytics queries,
-staged (as queries/analytics_r10_staged.py) and hash-proven through
-the driver-gate harness at sf0.01 AND the sf0.1 sweep env in rounds
-8–9, flipped into live ``@query(oracle=...)`` declarations in round 11
-(the round-10 driver window re-verified the round-9 batch instead —
-VERDICT r10 finding #1 — so the rehearsed flip executes one round
-late, byte-identical to the rehearsal: no collisions, exactly 50
-slots, no FUTURE_ORACLES graduations remaining, backlog closure by
-construction, pinned at the time by tests/test_r10_flip_rehearsal.py).
+hash-proven through the driver-gate harness at sf0.01 AND the sf0.1 sweep env
+before registration.
 
 Tranche themes — the measurement seams the first 435 queries leave open:
 

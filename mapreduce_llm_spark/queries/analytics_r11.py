@@ -1,10 +1,6 @@
 """Round-11 registered surface — 50 oracle-backed analytics queries,
-staged (as queries/analytics_r11_staged.py) and hash-proven through
-the driver-gate harness at sf0.01 AND the sf0.1 sweep env in round 11,
-flipped into live ``@query(oracle=...)`` declarations in round 12,
-byte-identical to the rehearsal (tests/test_r11_flip_rehearsal.py at
-the time): no collisions, exactly 50 slots, no FUTURE_ORACLES
-graduations remaining, backlog closure by construction.
+hash-proven through the driver-gate harness at sf0.01 AND the sf0.1 sweep env
+before registration.
 
 Tranche themes — the decision seams the first 485 queries leave open:
 

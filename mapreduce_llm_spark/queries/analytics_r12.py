@@ -1,11 +1,6 @@
 """Round-12 registered surface — 50 oracle-backed analytics queries,
-staged (as queries/analytics_r12_staged.py) and hash-proven through
-the driver-gate harness at sf0.01 AND the sf0.1 sweep env in rounds
-11-12, flipped into live ``@query(oracle=...)`` declarations in
-round 13, byte-identical to the rehearsal
-(tests/test_r12_flip_rehearsal.py at the time): no collisions,
-exactly 50 slots, no FUTURE_ORACLES graduations remaining, backlog
-closure by construction.
+hash-proven through the driver-gate harness at sf0.01 AND the sf0.1 sweep env
+before registration.
 
 Tranche themes — decision seams the first 535 queries leave open:
 

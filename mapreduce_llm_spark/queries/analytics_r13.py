@@ -1,11 +1,6 @@
 """Round-13 registered surface — 50 oracle-backed analytics queries,
-staged (as queries/analytics_r13_staged.py) and hash-proven through
-the driver-gate harness at sf0.01 AND the sf0.1 sweep env in rounds
-12-13, flipped into live ``@query(oracle=...)`` declarations in
-round 14, byte-identical to the rehearsal
-(tests/test_r13_flip_rehearsal.py at the time): no collisions,
-exactly 50 slots, no FUTURE_ORACLES graduations remaining, backlog
-closure by construction.
+hash-proven through the driver-gate harness at sf0.01 AND the sf0.1 sweep env
+before registration.
 
 Tranche themes — capacity, interleaving, and positional structure:
 

@@ -1,17 +1,11 @@
-"""Round-14 STAGED surface — seed tranche.
+"""Round-14 surface — 50 oracle-backed analytics queries.
 
-Same staged-tranche contract the round-9..13 batches followed before
-their flips (analytics_r12_staged → queries/analytics_r12.py in
-round 13; analytics_r13_staged flips in round 14): the round-13 window
-is fully allocated (50 pre-drafted pairs in ROUND13_WINDOW), so surface
-built beyond that point stages HERE and flips in round 15. Every entry
-is a complete (query fn, DuckDB oracle) pair hash-proven NOW at sf0.01
-and the sf0.1 sweep env by tests/test_r14_staged.py through the same
-harness the driver gate uses. NOT imported by registry.load_all —
-importing this module must stay registry-side-effect free (pinned by
-the staging test).
+Ten tranches: nonparametric statistics, corpus morphology, event-stream
+behavior, catalog pricing structure, cross-table integrity audits,
+order time-series shape, LLM data-prep planning, embedding geometry,
+retail behavioral dynamics, and calendar/value-band concentration.
 
-Determinism discipline: identical to the r9..r13 staging — exact
+Determinism discipline: identical to the r9..r13 modules — exact
 integer counts and e4/bp floors via nonneg integer division (abs +
 CASE re-sign for anything that can cross zero, the CLAUDE.md
 q_header_detail_recon rule), round(,4) only on the allowed
@@ -22,33 +16,16 @@ denominators, packed nonneg-integer argmax instead of struct argmin
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-#: name -> (query fn, DuckDB oracle SQL); round 15 flips these into
-#: @query(oracle=...) declarations verbatim.
-STAGED_R14: dict[str, tuple[QueryFn, str]] = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED_R14:
-            raise ValueError(f"duplicate staged query {name!r}")
-        STAGED_R14[name] = (fn, oracle)
-        return fn
-
-    return deco
+from mapreduce_llm_spark.registry import query
 
 
 def _r14_words(col):
     """Lowercased alpha word array — the shared tokenization of the
-    text queries (the _r13_words twin, kept module-local so the staged
+    text queries (the _r13_words twin, kept module-local so the analytics
     modules stay import-independent)."""
     return F.filter(
         F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
@@ -61,7 +38,7 @@ def _r14_words(col):
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_kendall_tau",
     oracle="""
     WITH monthly AS (
@@ -102,7 +79,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     an inequality — both sides are bounded by the CALENDAR (~80 rows
     at any SF: TPC-H's 1995-2001 date range is fixed while rows grow),
     so the broadcast nested-loop is a bounded grid, never data × data
-    (staged NLJ allowlist)."""
+    (plan-lint NLJ allowlist)."""
     o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_trunc("month", "o_orderdate").alias("m")
@@ -147,7 +124,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_kruskal_wallis",
     oracle="""
     WITH x AS (
@@ -247,7 +224,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
-@_staged(
+@query(
     "q_levene_bf",
     oracle="""
     WITH x AS (
@@ -384,7 +361,7 @@ def q_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_wilcoxon_signed",
     oracle="""
     WITH unit AS (
@@ -498,7 +475,7 @@ def q_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_ljung_box",
     oracle="""
     WITH daily AS (
@@ -564,7 +541,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(,4). Q accumulates over the 5 ordered lag rows (a ROWS
     frame — deterministic summation order both engines). The day
     series is bounded by the CALENDAR (~2400 rows at any SF); the lag
-    expansion is a 5-row grid cross (staged NLJ allowlist) resolved by
+    expansion is a 5-row grid cross (plan-lint NLJ allowlist) resolved by
     an equi-join on t+lag."""
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
@@ -638,7 +615,7 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_affix_profile",
     oracle="""
     WITH w AS (
@@ -707,7 +684,7 @@ def q_affix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_bigram_asymmetry",
     oracle="""
     WITH w AS (
@@ -799,7 +776,7 @@ def q_bigram_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_initial_letter_bias",
     oracle="""
     WITH w AS (
@@ -881,7 +858,7 @@ def q_initial_letter_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_rare_word_load",
     oracle="""
     WITH tok AS (
@@ -962,7 +939,7 @@ def q_rare_word_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_doclen_ranksize",
     oracle="""
     WITH ranked AS (
@@ -1024,7 +1001,7 @@ def q_doclen_ranksize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_session_threshold_sweep",
     oracle="""
     WITH gaps AS (
@@ -1109,7 +1086,7 @@ def q_session_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("threshold_s")
 
 
-@_staged(
+@query(
     "q_type_value_percentiles",
     oracle="""
     WITH v AS (
@@ -1197,7 +1174,7 @@ def q_type_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_dow_value_premium",
     oracle="""
     WITH d AS (
@@ -1262,7 +1239,7 @@ def q_dow_value_premium(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dow")
 
 
-@_staged(
+@query(
     "q_user_modal_share",
     oracle="""
     WITH per_type AS (
@@ -1334,7 +1311,7 @@ def q_user_modal_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_gap_weekend_mix",
     oracle="""
     WITH g AS (
@@ -1402,7 +1379,7 @@ def q_gap_weekend_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_partname_cooccur",
     oracle="""
     WITH toks AS (
@@ -1478,7 +1455,7 @@ def q_partname_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_brand_realized_ratio",
     oracle="""
     WITH j AS (
@@ -1540,7 +1517,7 @@ def q_brand_realized_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_brand_size_coverage",
     oracle="""
     WITH per_brand AS (
@@ -1567,7 +1544,7 @@ def q_brand_size_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global distinct-size count in bp) — the assortment-planning
     complement to q_brand_breadth. Two bounded aggregations; the
     1-row global distinct-size leg joins back as a broadcast scalar
-    cross (staged NLJ allowlist — bounded by construction); shares
+    cross (plan-lint NLJ allowlist — bounded by construction); shares
     are exact bp floors."""
     p = load_table(spark, sf_dir, "part")
     per_brand = p.groupBy(F.col("p_brand").alias("brand")).agg(
@@ -1593,7 +1570,7 @@ def q_brand_size_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_price_band_return",
     oracle="""
     WITH j AS (
@@ -1652,7 +1629,7 @@ def q_price_band_return(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_quantity_return_link",
     oracle="""
     WITH j AS (
@@ -1713,7 +1690,7 @@ def q_quantity_return_link(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_name_key_consistency",
     oracle="""
     WITH checks AS (
@@ -1787,7 +1764,7 @@ def q_name_key_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_acctbal_percentiles",
     oracle="""
     WITH v AS (
@@ -1874,7 +1851,7 @@ def q_acctbal_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_region_acct_net",
     oracle="""
     WITH cb AS (
@@ -1950,7 +1927,7 @@ def q_region_acct_net(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_date_sanity",
     oracle="""
     WITH j AS (
@@ -2002,7 +1979,7 @@ def q_date_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_coverage",
     oracle="""
     WITH j AS (
@@ -2063,7 +2040,7 @@ def q_embed_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_slope_break",
     oracle="""
     WITH monthly AS (
@@ -2200,7 +2177,7 @@ def q_slope_break(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_peak_month",
     oracle="""
     WITH monthly AS (
@@ -2273,7 +2250,7 @@ def q_peak_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("yr")
     )
 
-@_staged(
+@query(
     "q_rolling_corr",
     oracle="""
     WITH monthly AS (
@@ -2309,7 +2286,7 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     static q_agg_corr can't time-localize. The 6-month frame is
     materialized as a range self-join of the CALENDAR-BOUNDED monthly
     series (~400 rows at any SF — the broadcast nested-loop is a
-    bounded grid, staged NLJ allowlist), then the grouped corr fold
+    bounded grid, plan-lint NLJ allowlist), then the grouped corr fold
     (the q_agg_corr precedent; Spark's ANSI windowed corr raises
     DIVIDE_BY_ZERO on the unavoidable 1-row warm-up frames, so the
     window form is not portable), round(,4) with the -0.0
@@ -2369,7 +2346,7 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_momentum_flips",
     oracle="""
     WITH monthly AS (
@@ -2471,7 +2448,7 @@ def q_momentum_flips(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_per_day_rate",
     oracle="""
     WITH monthly AS (
@@ -2544,7 +2521,7 @@ def q_per_day_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_packing_bound",
     oracle="""
     WITH toks AS (
@@ -2618,7 +2595,7 @@ def q_packing_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("budget")
 
 
-@_staged(
+@query(
     "q_source_card",
     oracle="""
     WITH per_doc AS (
@@ -2680,7 +2657,7 @@ def q_source_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-@_staged(
+@query(
     "q_curriculum_schedule",
     oracle="""
     WITH per_doc AS (
@@ -2747,7 +2724,7 @@ def q_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("band")
 
 
-@_staged(
+@query(
     "q_dup_size_hist",
     oracle="""
     WITH clusters AS (
@@ -2776,7 +2753,7 @@ def q_dup_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     which decides whether near-dup work is even worth scheduling).
     Content identity via md5 (the cross-engine fingerprint basis —
     xxhash64 has no DuckDB twin); two grouped passes, a 1-row total
-    leg as a broadcast scalar cross (staged NLJ allowlist), exact bp
+    leg as a broadcast scalar cross (plan-lint NLJ allowlist), exact bp
     floors."""
     docs = load_table(spark, sf_dir, "documents")
     clusters = docs.groupBy(F.md5(F.col("text")).alias("h")).agg(
@@ -2798,7 +2775,7 @@ def q_dup_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_lexical_rank_score",
     oracle="""
     WITH tok AS (
@@ -2871,7 +2848,7 @@ def q_lexical_rank_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_embed_dim_corr",
     oracle="""
     WITH flat AS (
@@ -2919,7 +2896,7 @@ def q_embed_dim_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_dim_anova",
     oracle="""
     WITH flat AS (
@@ -3006,7 +2983,7 @@ def q_embed_dim_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dim")
 
 
-@_staged(
+@query(
     "q_embed_component_hist",
     oracle="""
     WITH flat AS (
@@ -3056,7 +3033,7 @@ def q_embed_component_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bin")
 
 
-@_staged(
+@query(
     "q_embed_topk_mass",
     oracle="""
     WITH per_vec AS (
@@ -3115,7 +3092,7 @@ def q_embed_topk_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_shells",
     oracle="""
     WITH per_vec AS (
@@ -3181,7 +3158,7 @@ def q_embed_shells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_priority_escalation",
     oracle="""
     WITH seq AS (
@@ -3256,7 +3233,7 @@ def q_priority_escalation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_return_drift",
     oracle="""
     WITH j AS (
@@ -3342,7 +3319,7 @@ def q_return_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("brand")
 
 
-@_staged(
+@query(
     "q_order_value_gini",
     oracle="""
     WITH lines AS (
@@ -3448,7 +3425,7 @@ def q_order_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_dormant_suppliers",
     oracle="""
     WITH cutoff AS (
@@ -3487,7 +3464,7 @@ def q_dormant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of HISTORICAL value they used to carry — high dormant value
     is a supply-continuity risk (q_slow_movers flags parts; this
     flags the supply side). One supplier aggregate, the corpus
-    horizon as a 1-row broadcast scalar cross (staged NLJ allowlist),
+    horizon as a 1-row broadcast scalar cross (plan-lint NLJ allowlist),
     broadcast nation dim, exact bp floors."""
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
@@ -3530,7 +3507,7 @@ def q_dormant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_customer_age_curve",
     oracle="""
     WITH aged AS (
@@ -3552,7 +3529,7 @@ def q_dormant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_customer_age_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order value by RELATIONSHIP AGE: every order indexed by
     half-year bands since that customer's first order (account-time,
-    not calendar time — the orders-side twin of the staged
+    not calendar time — the orders-side twin of the
     q_user_week_curve on events) — do long-tenured accounts spend
     more per order, the question LTV models assume an answer to. One
     keyed min-window for the first-order anchor, exact day arithmetic
@@ -3590,7 +3567,7 @@ def q_customer_age_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_type_hour_concentration",
     oracle="""
     WITH hourly AS (
@@ -3656,7 +3633,7 @@ def q_type_hour_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_value_band_markov",
     oracle="""
     WITH banded AS (
@@ -3722,7 +3699,7 @@ def q_value_band_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_win_nth_value",
     oracle="""
     WITH ranked AS (
@@ -3808,7 +3785,7 @@ def q_win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_supplier_brand_affinity",
     oracle="""
     WITH per_cell AS (
@@ -3886,7 +3863,7 @@ def q_supplier_brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_nation_assortment_reach",
     oracle="""
     WITH j AS (
@@ -3948,30 +3925,3 @@ def q_nation_assortment_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("nation")
     )
-
-
-#: The exact round-15 DRIVER_PRIORITY window, pre-drafted so the flip
-#: is mechanical (the round-8..13 playbook): the 50 staged queries in
-#: definition (= tranche) order — FUTURE_ORACLES is empty, so the whole
-#: window is new surface. tests/test_r14_flip_rehearsal.py pins that
-#: this list is exactly STAGED_R14 with no gaps, dupes, or registry
-#: collisions, and that the post-flip external-verification backlog is
-#: exactly this window.
-ROUND14_WINDOW: list[str] = [
-    "q_kendall_tau", "q_kruskal_wallis", "q_levene_bf", "q_wilcoxon_signed",
-    "q_ljung_box", "q_affix_profile", "q_bigram_asymmetry", "q_initial_letter_bias",
-    "q_rare_word_load", "q_doclen_ranksize", "q_session_threshold_sweep",
-    "q_type_value_percentiles", "q_dow_value_premium", "q_user_modal_share",
-    "q_gap_weekend_mix", "q_partname_cooccur", "q_brand_realized_ratio",
-    "q_brand_size_coverage", "q_price_band_return", "q_quantity_return_link",
-    "q_name_key_consistency", "q_acctbal_percentiles", "q_region_acct_net",
-    "q_date_sanity", "q_embed_coverage", "q_slope_break", "q_peak_month",
-    "q_rolling_corr", "q_momentum_flips", "q_per_day_rate", "q_packing_bound",
-    "q_source_card", "q_curriculum_schedule", "q_dup_size_hist",
-    "q_lexical_rank_score", "q_embed_dim_corr", "q_embed_dim_anova",
-    "q_embed_component_hist", "q_embed_topk_mass", "q_embed_shells",
-    "q_priority_escalation", "q_return_drift", "q_order_value_gini",
-    "q_dormant_suppliers", "q_customer_age_curve", "q_type_hour_concentration",
-    "q_value_band_markov", "q_win_nth_value", "q_supplier_brand_affinity",
-    "q_nation_assortment_reach",
-]

@@ -1,17 +1,12 @@
-"""Round-15 STAGED surface — seed tranche.
+"""Round-15 surface — 50 oracle-backed analytics queries.
 
-Same staged-tranche contract the round-9..14 batches followed before
-their flips (analytics_r13_staged → queries/analytics_r13.py in
-round 14; analytics_r14_staged flips in round 15): the round-14 window
-is fully allocated (50 pre-drafted pairs in ROUND14_WINDOW), so surface
-built beyond that point stages HERE and flips in round 16. Every entry
-is a complete (query fn, DuckDB oracle) pair hash-proven NOW at sf0.01
-and the sf0.1 sweep env by tests/test_r15_staged.py through the same
-harness the driver gate uses. NOT imported by registry.load_all —
-importing this module must stay registry-side-effect free (pinned by
-the staging test).
+Ten tranches: order-flow queueing, calendar structure, customer
+ordering dynamics, catalog pricing structure, event-stream
+microstructure, embedding geometry on exact e3 coordinates, corpus
+structure beyond frequency, integrity and joint dependence,
+statistical process control, and customer-base composition.
 
-Determinism discipline: identical to the r9..r14 staging — exact
+Determinism discipline: identical to the r9..r14 modules — exact
 integer counts and e4/bp floors via nonneg integer division (abs +
 CASE re-sign for anything that can cross zero, the CLAUDE.md
 q_header_detail_recon rule), round(,4) only on the allowed
@@ -22,33 +17,16 @@ denominators, packed nonneg-integer argmax instead of struct argmin
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-#: name -> (query fn, DuckDB oracle SQL); round 16 flips these into
-#: @query(oracle=...) declarations verbatim.
-STAGED_R15: dict[str, tuple[QueryFn, str]] = {}
-
-
-def _staged(name: str, oracle: str):
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED_R15:
-            raise ValueError(f"duplicate staged query {name!r}")
-        STAGED_R15[name] = (fn, oracle)
-        return fn
-
-    return deco
+from mapreduce_llm_spark.registry import query
 
 
 def _r15_words(col):
     """Lowercased alpha word array — the shared tokenization of the
-    text queries (the _r14_words twin, kept module-local so the staged
+    text queries (the _r14_words twin, kept module-local so the analytics
     modules stay import-independent)."""
     return F.filter(
         F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
@@ -65,7 +43,7 @@ def _r15_words(col):
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_little_law",
     oracle="""
     WITH per_order AS (
@@ -192,7 +170,7 @@ def q_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_first_ship_latency",
     oracle="""
     WITH per_order AS (
@@ -279,7 +257,7 @@ def q_first_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_ship_rate_balance",
     oracle="""
     WITH flows AS (
@@ -368,7 +346,7 @@ def q_ship_rate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_wip_value_days",
     oracle="""
     WITH per_order AS (
@@ -464,7 +442,7 @@ def q_wip_value_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_key_density",
     oracle="""
     WITH bounds AS (
@@ -547,7 +525,7 @@ def q_key_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_month_length_effect",
     oracle="""
     WITH monthly AS (
@@ -613,7 +591,7 @@ def q_month_length_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_dow_profile_align",
     oracle="""
     WITH o AS (
@@ -687,7 +665,7 @@ def q_dow_profile_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_quarter_shape",
     oracle="""
     SELECT CAST((extract(month FROM o_orderdate) - 1) % 3 + 1 AS BIGINT)
@@ -744,7 +722,7 @@ def q_quarter_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_seasonal_profile_align",
     oracle="""
     WITH o AS (
@@ -819,7 +797,7 @@ def q_seasonal_profile_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_year_boundary_dip",
     oracle="""
     WITH tagged AS (
@@ -907,7 +885,7 @@ def q_year_boundary_dip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_record_highs",
     oracle="""
     WITH seq AS (
@@ -997,7 +975,7 @@ def q_record_highs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_weekday_loyalty",
     oracle="""
     WITH per_dow AS (
@@ -1076,7 +1054,7 @@ def q_weekday_loyalty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_order_tempo",
     oracle="""
     WITH per_cust AS (
@@ -1168,7 +1146,7 @@ def q_order_tempo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_value_cv_by_tenure",
     oracle="""
     WITH per_cust AS (
@@ -1262,7 +1240,7 @@ def q_value_cv_by_tenure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_gap_acceleration",
     oracle="""
     WITH seq AS (
@@ -1358,7 +1336,7 @@ def q_gap_acceleration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_local_supply_premium",
     oracle="""
     WITH lines AS (
@@ -1484,7 +1462,7 @@ def q_local_supply_premium(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_size_ladder_gaps",
     oracle="""
     WITH sizes AS (
@@ -1515,7 +1493,7 @@ def q_size_ladder_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size-ladder continuity per brand: the distinct p_size values a
     brand actually offers, and the largest hole in that ladder — a
     max_gap far above the mean gap means a missing middle size
-    (assortment gap analysis; the staged q_brand_size_coverage counts
+    (assortment gap analysis; the r14 q_brand_size_coverage counts
     coverage vs the GLOBAL size set, this measures the brand's own
     ladder shape). Mean gap is exactly (max−min)/(n−1) — identity
     with the telescoping sum of lags, kept as nonneg integer
@@ -1548,7 +1526,7 @@ def q_size_ladder_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_supplier_peak_coherence",
     oracle="""
     WITH per_supp_month AS (
@@ -1647,7 +1625,7 @@ def q_supplier_peak_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_brand_grade_entropy",
     oracle="""
     WITH g AS (
@@ -1709,7 +1687,7 @@ def q_brand_grade_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_heavy_order_parts",
     oracle="""
     WITH thresh AS (
@@ -1816,7 +1794,7 @@ def q_heavy_order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_minute_uniformity",
     oracle="""
     WITH cells AS (
@@ -1895,7 +1873,7 @@ def q_minute_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_coactivity_rate",
     oracle="""
     WITH e AS (
@@ -1997,7 +1975,7 @@ def q_coactivity_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_user_burst_share",
     oracle="""
     WITH per_hour AS (
@@ -2072,7 +2050,7 @@ def q_user_burst_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_session_starter_types",
     oracle="""
     WITH seq AS (
@@ -2171,7 +2149,7 @@ def q_session_starter_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_hourly_handoff",
     oracle="""
     WITH hourly AS (
@@ -2242,7 +2220,7 @@ def q_hourly_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_embed_hoyer",
     oracle="""
     WITH q AS (
@@ -2326,7 +2304,7 @@ def q_embed_hoyer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_norm_chars_link",
     oracle="""
     WITH j AS (
@@ -2352,7 +2330,7 @@ def q_embed_norm_chars_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoders leak length into the norm, which then leaks into every
     dot-product ranking as a long-document prior — this is the
     check that decides whether similarity search needs norm
-    normalization first. The staged q_embed_coverage proves the ID
+    normalization first. The r14 q_embed_coverage proves the ID
     join EXISTS; this is the first statistic computed ACROSS it.
     Norms are IEEE sqrt of exact e3 integers; grouped corr rounded
     to 4 (the portable class), -0.0-normalized."""
@@ -2382,7 +2360,7 @@ def q_embed_norm_chars_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_quadrant_mix",
     oracle="""
     WITH s AS (
@@ -2458,7 +2436,7 @@ def q_embed_quadrant_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_cosine_to_mean",
     oracle="""
     WITH ev AS (
@@ -2576,7 +2554,7 @@ def q_embed_cosine_to_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_embed_linf_flatness",
     oracle="""
     WITH q AS (
@@ -2655,7 +2633,7 @@ def q_embed_linf_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_source_spread_spectrum",
     oracle="""
     WITH toks AS (
@@ -2723,7 +2701,7 @@ def q_source_spread_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_word_recurrence_gap",
     oracle="""
     WITH pos AS (
@@ -2796,7 +2774,7 @@ def q_word_recurrence_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_doc_opener_lift",
     oracle="""
     WITH words AS (
@@ -2841,7 +2819,7 @@ def q_doc_opener_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, each normalized by its overall token share — lift
     above 10000 marks genuine opening conventions (boilerplate
     headers, template starts) rather than mere corpus frequency.
-    The staged q_initial_letter_bias profiles first LETTERS of
+    The r14 q_initial_letter_bias profiles first LETTERS of
     words; the first-WORD-of-document convention is the
     template-detection signal (openers with huge lift ⇒ shared
     prefix templates worth deduplicating). Deterministic top-10 via
@@ -2889,7 +2867,7 @@ def q_doc_opener_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_hapax_position",
     oracle="""
     WITH pos AS (
@@ -2978,7 +2956,7 @@ def q_hapax_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_ttr_by_position",
     oracle="""
     WITH pos AS (
@@ -3063,7 +3041,7 @@ def q_ttr_by_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_linestatus_cutover",
     oracle="""
     WITH s AS (
@@ -3120,7 +3098,7 @@ def q_linestatus_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_key_time_order",
     oracle="""
     WITH b AS (
@@ -3177,7 +3155,7 @@ def q_key_time_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_priority_persistence",
     oracle="""
     WITH seq AS (
@@ -3278,7 +3256,7 @@ def q_priority_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_size_value_dependence",
     oracle="""
     WITH per_order AS (
@@ -3367,7 +3345,7 @@ def q_size_value_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_burst_cooldown",
     oracle="""
     WITH per_hour AS (
@@ -3515,7 +3493,7 @@ def q_burst_cooldown(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_control_limits",
     oracle="""
     WITH days AS (
@@ -3567,7 +3545,7 @@ def q_control_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|x·N − Sx|·1000·D > 2660·Smr·N — no division anywhere), so the
     day frame's magnitudes (x·N ~ 1e10 at sf10, ×1000·D ~ 1e16) stay
     inside int64 through sf100. The 1-row totals leg broadcasts
-    (STAGED_NLJ_OK)."""
+    (plan-lint NLJ_OK)."""
     o = load_table(spark, sf_dir, "orders")
     days = o.groupBy(F.col("o_orderdate").alias("d")).agg(
         F.count("*").cast("long").alias("x")
@@ -3607,7 +3585,7 @@ def q_control_limits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_count_acf",
     oracle="""
     WITH days AS (
@@ -3678,7 +3656,7 @@ def q_count_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_period_scan",
     oracle="""
     WITH days AS (
@@ -3758,7 +3736,7 @@ def q_period_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_revenue_bridge",
     oracle="""
     WITH months AS (
@@ -3832,7 +3810,7 @@ def q_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_missing_days",
     oracle="""
     WITH days AS (
@@ -3898,7 +3876,7 @@ def q_missing_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_staged(
+@query(
     "q_rfm_grid",
     oracle="""
     WITH anchor AS (
@@ -3941,7 +3919,7 @@ def q_rfm_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     value. Thresholds are FIXED constants (orders-per-customer and
     ticket size are scale-invariant in this corpus), so the grid is
     comparable across SF. One per-customer aggregate, then a ≤27-row
-    grid; the 1-row horizon leg broadcasts (STAGED_NLJ_OK). Recency
+    grid; the 1-row horizon leg broadcasts (plan-lint NLJ_OK). Recency
     against the corpus max keeps the answer stable however stale the
     snapshot (the q_retention_sweep convention)."""
     o = load_table(spark, sf_dir, "orders")
@@ -3981,7 +3959,7 @@ def q_rfm_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_whale_turnover",
     oracle="""
     WITH yearly AS (
@@ -4085,7 +4063,7 @@ def q_whale_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("yr")
 
 
-@_staged(
+@query(
     "q_league_mobility",
     oracle="""
     WITH rev AS (
@@ -4170,7 +4148,7 @@ def q_league_mobility(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("yr")
 
 
-@_staged(
+@query(
     "q_second_order_latency",
     oracle="""
     WITH seq AS (
@@ -4276,7 +4254,7 @@ def q_second_order_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_staged(
+@query(
     "q_spend_kurtosis",
     oracle="""
     WITH per AS (
@@ -4372,27 +4350,3 @@ def q_spend_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(m4 * 10000.0 / (m2 * m2)).cast("long").alias("kurt_e4"),
         (F.round(m3 / (m2 * F.sqrt(m2)), 4) + F.lit(0.0)).alias("skew_r4"),
     )
-
-
-#: Definition-order window for the round-16 flip — the 50 names
-#: CORRECTNESS_r16 must verify, pre-drafted so the flip is mechanical
-#: (the same contract ROUND14_WINDOW carries for round 15's flip).
-ROUND15_WINDOW: list[str] = [
-    "q_little_law", "q_first_ship_latency", "q_ship_rate_balance",
-    "q_wip_value_days", "q_key_density", "q_month_length_effect",
-    "q_dow_profile_align", "q_quarter_shape", "q_seasonal_profile_align",
-    "q_year_boundary_dip", "q_record_highs", "q_weekday_loyalty",
-    "q_order_tempo", "q_value_cv_by_tenure", "q_gap_acceleration",
-    "q_local_supply_premium", "q_size_ladder_gaps",
-    "q_supplier_peak_coherence", "q_brand_grade_entropy",
-    "q_heavy_order_parts", "q_minute_uniformity", "q_coactivity_rate",
-    "q_user_burst_share", "q_session_starter_types", "q_hourly_handoff",
-    "q_embed_hoyer", "q_embed_norm_chars_link", "q_embed_quadrant_mix",
-    "q_embed_cosine_to_mean", "q_embed_linf_flatness",
-    "q_source_spread_spectrum", "q_word_recurrence_gap", "q_doc_opener_lift",
-    "q_hapax_position", "q_ttr_by_position", "q_linestatus_cutover",
-    "q_key_time_order", "q_priority_persistence", "q_size_value_dependence",
-    "q_burst_cooldown", "q_control_limits", "q_count_acf", "q_period_scan",
-    "q_revenue_bridge", "q_missing_days", "q_rfm_grid", "q_whale_turnover",
-    "q_league_mobility", "q_second_order_latency", "q_spend_kurtosis",
-]

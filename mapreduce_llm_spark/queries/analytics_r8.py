@@ -1,14 +1,6 @@
 """Round-8 registered surface — 47 oracle-backed analytics queries,
-staged (as queries/analytics_r8_staged.py) and hash-proven through the
-driver-gate harness at sf0.01 AND sf0.1 in round 7, flipped into live
-``@query(oracle=...)`` declarations in round 8 the moment the round-7
-window verified (the external-book invariant,
-tests/test_plans.py::test_external_book_stays_closed, allows new
-oracle-backed surface only when it fits the current DRIVER_PRIORITY
-window). The flip was rehearsed in round 7
-(tests/test_r8_flip_rehearsal.py at the time): no collisions, exactly
-50 slots with the 3 FUTURE_ORACLES graduations fronting, backlog
-closure by construction.
+hash-proven through the driver-gate harness at sf0.01 AND sf0.1
+before registration.
 
 Determinism discipline: identical to analytics_r7/r7b/r7c — exact
 integer/cents/e4-floor arithmetic everywhere, round(,4) only on
@@ -4404,7 +4396,7 @@ def q_histogram_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Tranche 7 — feature-store point-in-time correctness, sampling-bias
 # audit, and the dedup-savings report. Fills the round-8 window to a
-# fully pre-proven 50 (44 staged + 3 FUTURE_ORACLES flips + 3 here).
+# fully pre-proven 50 (44 earlier + 3 oracle graduations + 3 here).
 # ---------------------------------------------------------------------------
 
 

@@ -1,14 +1,6 @@
 """Round-9 registered surface — 50 oracle-backed analytics queries,
-staged (as queries/analytics_r9_staged.py) and hash-proven through the
-driver-gate harness at sf0.001, sf0.01 AND sf0.1 in round 8, flipped
-into live ``@query(oracle=...)`` declarations in round 9 the moment
-the round-8 window verified 50/50 hash-green (the external-book
-invariant, tests/test_plans.py::test_external_book_stays_closed,
-allows new oracle-backed surface only when it fits the current
-DRIVER_PRIORITY window). The flip was rehearsed in round 8
-(tests/test_r9_flip_rehearsal.py at the time): no collisions, exactly
-50 slots, no FUTURE_ORACLES graduations remaining (the whole window is
-new surface), backlog closure by construction.
+hash-proven through the driver-gate harness at sf0.001, sf0.01 AND sf0.1
+before registration.
 
 Tranche themes (ROUND8_NOTES item 3): watermark tuning + leakage-safe
 labels, curation/finance audits (sorted-neighborhood dedup, RRF rank
@@ -3540,7 +3532,7 @@ def q_cohort_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round-8 tranche 6 of the round-9 staging — fills the staging to a
-# FULL 50-query window (no FUTURE_ORACLES remain, so round 9's window
+# FULL 50-query window (no oracle graduations remain, so round 9's window
 # is entirely new surface). Flip checklist additions (NLJ_OK):
 # q_quantile_treatment (1-row per-variant count legs),
 # q_brand_cannibalization (none — month equi-join),

@@ -1,18 +1,11 @@
-"""Oracle staging and graduation.
+"""Graduated oracle SQL.
 
-``FUTURE_ORACLES`` holds DuckDB oracle twins for rows-only queries,
-drafted and HASH-TESTED in advance (tests/test_future_oracles.py runs
-them through the same compare harness as the driver gate) but not yet
-registered in registry.ORACLE — an oracle-backed query must occupy a
-DRIVER_PRIORITY window slot (tests/test_plans.py window invariants),
-so a full window defers the flip to the next round.
-
-``GRADUATED_ORACLES`` holds the SQL of entries that HAVE been flipped
-into their ``@query(oracle=...)`` declarations (the round-5 staging
-batch graduated in round 6). The text lives here rather than inline so
-the large SQL blocks don't swamp the query modules; each declaration
-references its entry by name, and tests/test_future_oracles.py pins
-that every graduated name is registered with exactly this SQL.
+``GRADUATED_ORACLES`` holds the DuckDB oracle SQL of queries that were
+first registered rows-only and later given an oracle twin. The text
+lives here rather than inline so the large SQL blocks don't swamp the
+query modules; each ``@query(oracle=...)`` declaration references its
+entry by name, and tests/test_future_oracles.py pins that every
+graduated name is registered with exactly this SQL.
 """
 
 from __future__ import annotations
@@ -36,7 +29,7 @@ def _pagerank_sql(iters: int = 10, damping: float = 0.85) -> str:
     expression tree ((1-d)/n + d*(inflow + dm/n)); the only slack is
     float summation order inside sum(rank/od), ~1e-16 relative, eight
     orders below the round(,8) emission — hash-proven at sf0.01 and
-    sf0.1 by tests/test_future_oracles.py.
+    sf0.1 by tests/test_oracle_queries.py.
 
     Every per-iteration CTE is AS MATERIALIZED: each r{i} is
     referenced three times (dangling leg, inflow leg, next rank), and
@@ -193,13 +186,6 @@ _TEXT_FINGERPRINT_SQL = r"""
     FROM votes v LEFT JOIN fp ON v.doc_id = fp.doc_id
     ORDER BY v.doc_id
     """
-
-# Round-9+ staging area: drafted-and-proven twins awaiting a window
-# slot. Empty since the round-8 flip graduated the last batch; whole
-# new (query, oracle) pairs stage in queries/analytics_r10_staged.py
-# instead — this dict is only for oracle flips of ALREADY-REGISTERED
-# rows-only queries.
-FUTURE_ORACLES: dict[str, str] = {}
 
 GRADUATED_ORACLES: dict[str, str] = {
     # ---- round-8 graduation batch (staged + hash-proven in round 7;

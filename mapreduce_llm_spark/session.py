@@ -68,11 +68,15 @@ def get_spark(
 
         for kv in filter(None, (s.strip() for s in extra.split(";"))):
             k, _, v = kv.partition("=")
+            # the value in effect, defaults included; an unknown key
+            # that was never set raises
             try:
-                actual = spark.conf.get(k, None)
+                actual = spark.conf.get(k)
             except Exception:
                 actual = None
-            if actual != v:
+            # Spark spells values its own way ("true" for TRUE), so
+            # compare case- and whitespace-insensitively
+            if (actual or "").strip().lower() != v.strip().lower():
                 print(
                     f"WARNING: SPARK_GRAFT_CONF override {k}={v} NOT "
                     f"active (session pre-existed; actual={actual})",

@@ -265,3 +265,16 @@ def test_count_memo_matches_encode_len():
     cold = BytePairEncoder(_toy_bpe_ranks())
     for t in texts:
         assert cold.count(t) == enc.count(t), t
+
+
+def test_count_memo_skips_long_pieces():
+    """A piece longer than _COUNT_MEMO_PIECE_MAX is counted exactly but
+    never memoized, so the entry cap also bounds the memo's key bytes."""
+    from mapreduce_llm_spark.queries.textprep import _toy_bpe_ranks
+
+    enc = BytePairEncoder(_toy_bpe_ranks())
+    enc.count("warm")
+    before = len(enc._count_memo)
+    long_piece = "q" * (BytePairEncoder._COUNT_MEMO_PIECE_MAX + 1) + "unique"
+    assert enc.count(long_piece) == len(enc.encode(long_piece))
+    assert len(enc._count_memo) == before

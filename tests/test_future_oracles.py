@@ -1,36 +1,14 @@
-"""Oracle staging/graduation invariants (queries/future_oracles.py).
-
-FUTURE_ORACLES entries are proven NOW with the same harness the driver
-gate uses — each drafted DuckDB twin must already hash-match its live
-rows-only query at sf0.01, so a later flip into @query(oracle=...)
-carries no new risk. The file also pins that staged names are NOT yet
-registered oracles, and that every GRADUATED_ORACLES entry (the
-round-5 staging batch, flipped in round 6) IS registered with exactly
-the staged SQL — the graduation cannot silently fork from what was
-proven."""
+"""Graduated-oracle invariant (queries/future_oracles.py): every
+GRADUATED_ORACLES entry is registered with exactly that SQL, so a
+graduation cannot silently fork from the text its declaration names.
+The hash check itself is tests/test_oracle_queries.py."""
 
 from __future__ import annotations
 
-import pytest
-
 from mapreduce_llm_spark import registry
-from mapreduce_llm_spark.queries.future_oracles import (
-    FUTURE_ORACLES,
-    GRADUATED_ORACLES,
-)
-from tests.conftest import SF_DIR
-from tests.oracle_harness import compare, duckdb_conn
+from mapreduce_llm_spark.queries.future_oracles import GRADUATED_ORACLES
 
 registry.load_all()
-
-
-def test_staged_names_are_registered_rows_only():
-    for name in FUTURE_ORACLES:
-        assert name in registry.QUERIES, name
-        assert name not in registry.ORACLE, (
-            f"{name} graduated to a registered oracle — move its SQL "
-            "from FUTURE_ORACLES to GRADUATED_ORACLES"
-        )
 
 
 def test_graduated_names_are_registered_with_staged_sql():
@@ -41,22 +19,3 @@ def test_graduated_names_are_registered_with_staged_sql():
             f"{name} is graduated but its registered oracle SQL differs "
             "from the staged (hash-proven) text"
         )
-
-
-def test_no_name_in_both_dicts():
-    overlap = set(FUTURE_ORACLES) & set(GRADUATED_ORACLES)
-    assert not overlap, f"staged AND graduated: {sorted(overlap)}"
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb_conn(SF_DIR)
-    yield c
-    c.close()
-
-
-@pytest.mark.parametrize("name", sorted(FUTURE_ORACLES))
-def test_future_oracle_hash_matches(spark, con, name):
-    df = registry.QUERIES[name](spark, SF_DIR)
-    ok, msg = compare(df, con, FUTURE_ORACLES[name], name)
-    assert ok, msg

@@ -143,6 +143,21 @@ NLJ_OK = {
     # (the Expand-form scale fix, ROUND13_NOTES) — every leg is a
     # 1-row aggregate by construction
     "q_sortkey_advisor",  # 9 broadcast 1-row pair-NDV legs + count leg
+    # round-14 batch: every entry is a broadcast scalar/grid leg
+    "q_kendall_tau",  # calendar-bounded month×month inequality grid + 1-row count leg
+    "q_ljung_box",  # broadcast 5-row lag grid + 1-row denominator leg
+    "q_session_threshold_sweep",  # broadcast 1-row (n_users, n_events) leg
+    "q_brand_size_coverage",  # broadcast 1-row global distinct-size leg
+    "q_dup_size_hist",  # broadcast 1-row corpus-doc-total leg
+    "q_dormant_suppliers",  # broadcast 1-row horizon-cutoff leg
+    # round-15 batch: every entry is a broadcast scalar leg
+    "q_key_density",  # broadcast 1-row keyspace-bounds leg
+    "q_heavy_order_parts",  # broadcast 1-row mean-threshold leg
+    "q_embed_cosine_to_mean",  # broadcast 1-row global-mean-vector leg
+    "q_doc_opener_lift",  # broadcast 1-row corpus-totals leg
+    "q_size_value_dependence",  # broadcast 1-row grand-total leg
+    "q_control_limits",  # broadcast 1-row I-MR totals leg
+    "q_rfm_grid",  # broadcast 1-row corpus-horizon (max date) leg
 }
 
 PY_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
@@ -160,6 +175,11 @@ def test_plan_lint(spark, name):
     if name not in PYTHON_OK:
         for marker in PY_MARKERS:
             assert marker not in plan, f"{name}: unexpected Python crossing ({marker})"
+
+
+def test_allowlists_name_registered_queries():
+    stale = (NLJ_OK | PYTHON_OK) - set(registry.QUERIES)
+    assert not stale, f"allowlisted but not registered: {sorted(stale)}"
 
 
 def test_no_broadcast_hint_on_sf_scaling_tables():

@@ -1,65 +1,21 @@
-"""Semantic laws for the round-14 staged tranche — properties the hash
-gate can't express, plus the plan lint the round-14 flip will inherit.
+"""Semantic invariants for the round-14 query batch (queries/analytics_r14.py)
+— algebraic laws of the claimed algorithms that the DuckDB hash gate
+cannot express (it proves Spark ≡ oracle, not that both implement the
+CLAIMED semantics). Evaluated on real testdata at SF_DIR. Plan lint is
+the blanket sweep in tests/test_plan_lint.py.
 """
 
 from __future__ import annotations
 
-import math
-
-import pytest
-
-from tests.conftest import STAGED_TIER
-
-pytestmark = STAGED_TIER
-
+from mapreduce_llm_spark import registry
 from mapreduce_llm_spark.io import load_table
-from mapreduce_llm_spark.queries.analytics_r14_staged import STAGED_R14
-from tests.conftest import SF_DIR, SMOKE_SF_DIR
+from tests.conftest import SF_DIR
 
-# Broadcast grid/scalar legs by design — copy into NLJ_OK on the
-# round-14 flip.
-STAGED_NLJ_OK: set[str] = {
-    "q_kendall_tau",  # calendar-bounded month×month inequality grid + 1-row count leg
-    "q_ljung_box",  # broadcast 5-row lag grid + 1-row denominator leg
-    "q_session_threshold_sweep",  # broadcast 1-row (n_users, n_events) leg
-    "q_brand_size_coverage",  # broadcast 1-row global distinct-size leg
-    "q_dup_size_hist",  # broadcast 1-row corpus-doc-total leg
-    "q_dormant_suppliers",  # broadcast 1-row horizon-cutoff leg
-}
-
-PY_MARKERS = (
-    "BatchEvalPython",
-    "ArrowEvalPython",
-    "MapInPandas",
-    "FlatMapGroupsInPandas",
-)
+registry.load_all()
 
 
 def _run(spark, name):
-    fn, _sql = STAGED_R14[name]
-    return [r.asDict() for r in fn(spark, SF_DIR).collect()]
-
-
-@pytest.mark.parametrize("name", sorted(STAGED_R14))
-def test_staged_plan_lint(spark, name):
-    fn, _sql = STAGED_R14[name]
-    df = fn(spark, SMOKE_SF_DIR)
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "simple"
-    )
-    plan = df._jdf.queryExecution().explainString(jmode)
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-    if name not in STAGED_NLJ_OK:
-        assert "BroadcastNestedLoopJoin" not in plan, (
-            f"{name}: nested-loop join — add to STAGED_NLJ_OK with reason"
-        )
-    for marker in PY_MARKERS:
-        assert marker not in plan, f"{name}: Python crossing ({marker})"
-
-
-def test_staged_nlj_allowlist_is_not_stale():
-    stale = STAGED_NLJ_OK - set(STAGED_R14)
-    assert not stale, f"allowlisted but not staged: {sorted(stale)}"
+    return [r.asDict() for r in registry.QUERIES[name](spark, SF_DIR).collect()]
 
 
 # ---------------------------------------------------------------------------

@@ -9,16 +9,12 @@ in one place.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_llm_spark import registry
-
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Round-9 audit of every rows-only query (VERDICT r8 item 5), against
 # the full current oracle toolbox (md5-replay arithmetic, MATERIALIZED
@@ -193,36 +189,12 @@ API_SURFACE = {
 
 
 def verification_backlog() -> tuple[list[str], list[str]]:
-    """Derive the external-verification state from the registry plus
-    the driver's CORRECTNESS records of rounds STRICTLY BEFORE
-    registry.DRIVER_PRIORITY_ROUND — the exact computation the window
-    invariant test runs (tests/test_plans.py::
-    test_driver_priority_round7_window). Returns (queries never
-    externally verified at declared strength and INSIDE the current
-    50-slot window, same but OUTSIDE the window — the true rollover
-    list). Round 5's hand-maintained rollover comment drifted (judge
-    finding #4); this derivation replaces it."""
-    records: dict[str, list[dict]] = {}
-    for fname in sorted(os.listdir(REPO_ROOT)):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
-        if not m or int(m.group(1)) >= registry.DRIVER_PRIORITY_ROUND:
-            continue
-        with open(os.path.join(REPO_ROOT, fname)) as fh:
-            for name, rec in json.load(fh).items():
-                records.setdefault(name, []).append(rec)
-
-    def verified(name: str) -> bool:
-        recs = records.get(name, [])
-        if name in registry.ORACLE:
-            return any(r.get("hash_match") is True for r in recs)
-        return bool(recs)
-
-    window = set(list(registry.QUERIES)[:50])
-    unverified = sorted(n for n in registry.QUERIES if not verified(n))
-    return (
-        [n for n in unverified if n in window],
-        [n for n in unverified if n not in window],
-    )
+    """Queries the driver has never verified at their declared
+    strength, split into (inside the current driver window, rolling
+    over past it), each in driver order (registry.priority_groups)."""
+    oracle_new, rows_new, _ = registry.priority_groups()
+    unverified = oracle_new + rows_new
+    return unverified[: registry.WINDOW], unverified[registry.WINDOW :]
 
 
 def main() -> None:
@@ -280,55 +252,17 @@ def main() -> None:
         "",
         "## External-verification backlog (derived)",
         "",
-        f"Basis: driver CORRECTNESS records of rounds < "
-        f"{registry.DRIVER_PRIORITY_ROUND} (registry.DRIVER_PRIORITY_ROUND); "
-        "oracle-backed queries count as verified only with a hash-green "
-        "record, rows-only with any driver record. Derived by "
-        "tools/gen_inventory.verification_backlog — the same computation "
-        "the window-invariant test pins.",
+        "Basis: every driver CORRECTNESS record on disk; oracle-backed "
+        "queries count as verified only with a hash-green record, "
+        "rows-only with any driver record. Derived by "
+        "registry.priority_groups, the same order registry.load_all "
+        "gives the driver.",
         "",
-        f"- In the current 50-slot window ({len(in_window)}): "
+        f"- In the current {registry.WINDOW}-slot window ({len(in_window)}): "
         + (", ".join(f"`{n}`" for n in in_window) or "(none)"),
         f"- Rolling over to the next round ({len(rollover)}): "
         + (", ".join(f"`{n}`" for n in rollover) or "(none)"),
     ]
-    from mapreduce_llm_spark.queries.future_oracles import FUTURE_ORACLES
-
-    if FUTURE_ORACLES:
-        lines += [
-            "",
-            "## Staged oracle flips (derived)",
-            "",
-            f"{len(FUTURE_ORACLES)} staged oracle flips for registered "
-            "rows-only queries (queries/future_oracles.py), hash-proven "
-            "by tests/test_future_oracles.py: "
-            + ", ".join(f"`{n}`" for n in sorted(FUTURE_ORACLES)),
-        ]
-    from mapreduce_llm_spark.queries.analytics_r14_staged import STAGED_R14
-
-    lines += [
-        "",
-        "## Staged for the round-15 window (derived)",
-        "",
-        f"{len(STAGED_R14)} complete (query, oracle) pairs in "
-        "queries/analytics_r14_staged.py — hash-proven by "
-        "tests/test_r14_staged.py; surface built after the round-13 flip "
-        "filled its window stages one window further out: "
-        + ", ".join(f"`{n}`" for n in sorted(STAGED_R14)),
-    ]
-    from mapreduce_llm_spark.queries.analytics_r15_staged import STAGED_R15
-
-    if STAGED_R15:
-        lines += [
-            "",
-            "## Staged for the round-16 window (derived)",
-            "",
-            f"{len(STAGED_R15)} complete (query, oracle) pairs in "
-            "queries/analytics_r15_staged.py — hash-proven by "
-            "tests/test_r15_staged.py; the round-14 staging is itself "
-            "full, so this tranche stages two windows out: "
-            + ", ".join(f"`{n}`" for n in sorted(STAGED_R15)),
-        ]
     lines += [
         "",
         "## Library surface without a query form",

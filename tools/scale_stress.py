@@ -271,21 +271,8 @@ def main() -> None:
     registry.load_all()
     spark = get_spark(app_name="mapreduce_llm_spark-scale-stress")
 
-    def resolve(name: str):
-        if name in registry.QUERIES:
-            return registry.QUERIES[name]
-        # staged-but-unregistered surface is stressed BEFORE its flip
-        from mapreduce_llm_spark.queries.analytics_r14_staged import STAGED_R14
-        from mapreduce_llm_spark.queries.analytics_r15_staged import STAGED_R15
-
-        if name in STAGED_R14:
-            return STAGED_R14[name][0]
-        if name in STAGED_R15:
-            return STAGED_R15[name][0]
-        raise KeyError(f"{name}: not registered and not staged in r14/r15")
-
     def bench(name: str, sf_dir: str) -> float:
-        qfn = resolve(name)
+        qfn = registry.QUERIES[name]
         qfn(spark, sf_dir).write.mode("overwrite").format("noop").save()  # warm
         ts = []
         for _ in range(passes):
