@@ -1,4 +1,4 @@
-"""Content-addressed LLM result cache with anti-join resume.
+"""Content-addressed LLM result cache with a left-join probe.
 
 The reference memoizes per-chunk results positionally —
 ``<base>/resultN.txt`` keyed by chunk index only (reference
@@ -12,9 +12,12 @@ SURVEY §7 phase 2.
 
 Storage is a parquet table (a directory of append-only part files) —
 at cluster scale that's a shared object-store prefix every executor can
-read; the resume path is a broadcast-able left-anti join, so a resumed
-run touches only the missing chunks, mirroring the reference's
-"second run makes zero API calls" semantics content-addressedly.
+read. Two tasks that answer the same chunk text both append it, so the
+table may hold a key more than once; ``read_cache`` keeps one row per
+key. The resume path is one broadcast left join (``probe_cache``): a
+null ``result`` marks a miss, and only misses reach the client,
+mirroring the reference's "second run makes zero API calls" semantics
+content-addressedly.
 """
 
 from __future__ import annotations
@@ -41,11 +44,16 @@ def cache_key_col(chunk_text_col: str, prompt: str, model: str):
 
 
 def read_cache(spark: SparkSession, cache_dir: str) -> DataFrame:
-    """Load the cache table; empty DataFrame when absent."""
+    """Load the cache table, one row per ``cache_key`` (the least
+    result, so a re-read picks the same one); empty when absent."""
     if os.path.isdir(cache_dir) and any(
         f.endswith(".parquet") for f in os.listdir(cache_dir)
     ):
-        return spark.read.parquet(cache_dir).select("cache_key", "result")
+        return (
+            spark.read.parquet(cache_dir)
+            .groupBy("cache_key")
+            .agg(F.min("result").alias("result"))
+        )
     return spark.createDataFrame([], CACHE_SCHEMA)
 
 
@@ -62,14 +70,18 @@ def clean_cache(cache_dir: str) -> None:
     shutil.rmtree(cache_dir, ignore_errors=True)
 
 
+def probe_cache(keyed_chunks: DataFrame, cache: DataFrame) -> DataFrame:
+    """Attach each chunk's cached ``result`` by ``cache_key``; null marks
+    a miss. One left join, and the cache side is tiny relative to the
+    corpus, so it is broadcast."""
+    return keyed_chunks.join(F.broadcast(cache), "cache_key", "left")
+
+
 def split_cached(
     keyed_chunks: DataFrame, cache: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Partition chunks into (hits-with-result, misses) by cache_key.
-
-    Anti-join for misses, inner join for hits; the cache side is tiny
-    relative to the corpus, so Catalyst broadcasts it.
-    """
-    hits = keyed_chunks.join(F.broadcast(cache), "cache_key", "inner")
-    misses = keyed_chunks.join(F.broadcast(cache), "cache_key", "left_anti")
-    return hits, misses
+    """Partition chunks into (hits-with-result, misses) by cache_key,
+    both read off one ``probe_cache``."""
+    probed = probe_cache(keyed_chunks, cache)
+    hit = F.col("result").isNotNull()
+    return probed.filter(hit), probed.filter(~hit).drop("result")

@@ -10,28 +10,43 @@ Reference behavior being re-expressed (not ported):
 - the client is injectable so tests run a deterministic fake
   (reference internal/openai/chat.go:13-16, mapreduce_test.go:17-54).
 
-Spark shape: ``mapInPandas`` over the chunk table. Parallelism is the
-partition count — bounded and tunable via repartition(n), a deliberate
-improvement over the reference's unbounded goroutine-per-chunk fan-out
-(reference internal/cli/mapreduce.go:93-122). Clients must be small and
-picklable; they are constructed once per partition, not per row.
+Spark shape: ``mapInPandas`` over the chunk table. Each task keeps
+``CALLS_IN_FLIGHT_PER_TASK`` calls in flight on a thread pool — calls
+are I/O-bound, so threads, not Spark tasks, are the unit of fan-out —
+and the task count is the partition count (``concurrency=n``
+repartitions). In-flight calls are therefore bounded at tasks × the
+per-task constant: the reference's goroutine-per-chunk fan-out
+(reference internal/cli/mapreduce.go:93-122), bounded. Clients must be
+small, picklable and thread-safe; each task unpickles one instance and
+its threads share it.
 """
 
 from __future__ import annotations
 
 import re
+import threading
 from collections.abc import Iterator
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from typing import Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 RETURN_LINES_SUFFIX = "\nReturn the lines that you want to keep."
 
+# Calls each Spark task keeps in flight. Calls wait on the network, so a
+# task's threads overlap them; total in flight is tasks × this bound.
+CALLS_IN_FLIGHT_PER_TASK = 16
+
 
 class ChatClient(Protocol):
-    """Minimal chat interface (the reference's ChatGenerator seam)."""
+    """Minimal chat interface (the reference's ChatGenerator seam).
+
+    ``generate`` may be called from several threads at once: a task's
+    calls share one instance (see ``CALLS_IN_FLIGHT_PER_TASK``)."""
 
     def generate(self, system: str, user: str) -> str: ...
 
@@ -110,7 +125,18 @@ class OpenAICompatClient:
         return content
 
 
-RESULT_SCHEMA = "doc_id long, chunk_id long, chunk_text string, result string"
+def _generate_all(
+    pool: ThreadPoolExecutor, client: ChatClient, system: str, texts: list[str]
+) -> list[str]:
+    """One call per text on ``pool``, results in input order. The first
+    failing call cancels every queued call and re-raises, so a failing
+    provider is not sent the rest of the batch."""
+    futures = [pool.submit(client.generate, system, t) for t in texts]
+    done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+    if pending:
+        pool.shutdown(cancel_futures=True)
+        next(f for f in done if f.exception() is not None).result()
+    return [f.result() for f in futures]
 
 
 def llm_map(
@@ -119,27 +145,43 @@ def llm_map(
     client: ChatClient,
     concurrency: int | None = None,
 ) -> DataFrame:
-    """Map each chunk through the LLM: adds a ``result`` column.
+    """Fill a ``result`` column through the LLM and flag the rows that
+    were called in a boolean ``fresh`` column; every input column passes
+    through.
 
-    ``concurrency`` bounds simultaneous in-flight calls by
-    repartitioning (each partition runs one client loop). At cluster
-    scale this is the rate limiter the reference lacks.
+    Rows whose ``result`` is already set (a cache probe's hits) are not
+    sent. Without a ``result`` column every row is sent. Within a batch,
+    rows with equal ``chunk_text`` share one call and only the first is
+    flagged ``fresh``, so a cache append writes each answer once.
+
+    ``concurrency`` repartitions to that many tasks; each keeps up to
+    ``CALLS_IN_FLIGHT_PER_TASK`` calls in flight.
     """
     system_prompt = prompt + RETURN_LINES_SUFFIX
+    if "result" not in chunks.columns:
+        chunks = chunks.withColumn("result", F.lit(None).cast("string"))
+    if concurrency is not None:
+        chunks = chunks.repartition(concurrency)
+    schema = T.StructType(
+        [f for f in chunks.schema if f.name != "result"]
+        + [T.StructField("result", T.StringType()), T.StructField("fresh", T.BooleanType())]
+    )
+    columns = schema.fieldNames()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            results = [
-                client.generate(system_prompt, chunk) for chunk in pdf["chunk_text"]
-            ]
-            yield pdf.assign(result=results)[
-                ["doc_id", "chunk_id", "chunk_text", "result"]
-            ]
+        with ThreadPoolExecutor(CALLS_IN_FLIGHT_PER_TASK) as pool:
+            for pdf in batches:
+                todo = pdf["result"].isna()
+                texts = pdf.loc[todo, "chunk_text"].drop_duplicates()
+                answers = dict(
+                    zip(texts, _generate_all(pool, client, system_prompt, texts.tolist()))
+                )
+                fresh = pd.Series(False, index=pdf.index)
+                fresh[texts.index] = True
+                result = pdf["result"].where(~todo, pdf["chunk_text"].map(answers))
+                yield pdf.assign(result=result, fresh=fresh)[columns]
 
-    src = chunks.select("doc_id", "chunk_id", "chunk_text")
-    if concurrency is not None:
-        src = src.repartition(concurrency)
-    return src.mapInPandas(run, schema=RESULT_SCHEMA)
+    return chunks.mapInPandas(run, schema=schema)
 
 
 @dataclass
@@ -183,10 +225,12 @@ class RetryingClient:
 @dataclass
 class RateLimitedClient:
     """Token-bucket rate limit decorator: at most ``max_per_second``
-    calls per second per client instance (i.e. per Python worker —
-    cluster-wide rate ≈ max_per_second × concurrency, so set
-    ``llm_map(concurrency=n)`` and this together to hit a provider
-    quota exactly). ``clock``/``sleep`` are injectable for tests."""
+    calls per second per client instance, i.e. per Spark task, whose
+    threads share it — cluster-wide rate ≈ max_per_second × concurrency,
+    so set ``llm_map(concurrency=n)`` and this together to hit a provider
+    quota exactly. Each call reserves the next free slot under a lock and
+    sleeps outside it, so concurrent callers keep the spacing.
+    ``clock``/``sleep`` are injectable for tests."""
 
     inner: ChatClient
     max_per_second: float = 1.0
@@ -195,15 +239,26 @@ class RateLimitedClient:
 
     def __post_init__(self) -> None:
         self._next_allowed = 0.0
+        self._lock = threading.Lock()
+
+    def __getstate__(self) -> dict:
+        state = self.__dict__.copy()
+        del state["_lock"]  # locks do not pickle; each copy gets its own
+        return state
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state)
+        self._lock = threading.Lock()
 
     def generate(self, system: str, user: str) -> str:
         import time as _time
 
         now_fn = self.clock or _time.monotonic
         do_sleep = self.sleep or _time.sleep
-        now = now_fn()
-        if now < self._next_allowed:
-            do_sleep(self._next_allowed - now)
-            now = self._next_allowed
-        self._next_allowed = now + 1.0 / self.max_per_second
+        with self._lock:
+            now = now_fn()
+            slot = max(now, self._next_allowed)
+            self._next_allowed = slot + 1.0 / self.max_per_second
+        if slot > now:
+            do_sleep(slot - now)
         return self.inner.generate(system, user)

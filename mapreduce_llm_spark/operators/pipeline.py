@@ -3,6 +3,12 @@ reduce — the reference's whole program (reference
 internal/cli/mapreduce.go:28-149) as composable DataFrame operators,
 plus the semantic operators its README names (SURVEY §2B).
 
+A cached run resolves every chunk in one pass: the chunker runs once,
+one broadcast left join probes the cache, and one ``llm_map`` stage
+calls the client for the misses only. The resolved frame is
+materialized once, narrow (no chunk text), because the cache append
+and the caller's sink are separate actions that both read it.
+
 Key re-expressions:
 - the interactive confirm gate (mapreduce.go:53-65) becomes a
   non-interactive ``dry_run=True`` path returning a CostEstimate
@@ -25,9 +31,12 @@ from mapreduce_llm_spark.functions.tokens import (
     MODEL_COSTS_PER_1M_INPUT_TOKENS,
     count_tokens_str,
 )
-from mapreduce_llm_spark.operators.cache import (
+# split_cached is not called here, but stays importable from this module:
+# tracing wraps the cache layer by these names (perfbench/run.py)
+from mapreduce_llm_spark.operators.cache import (  # noqa: F401
     append_cache,
     cache_key_col,
+    probe_cache,
     read_cache,
     split_cached,
 )
@@ -107,7 +116,9 @@ def map_reduce_llm(
 
     With ``cache_dir``, completed chunks are served from the
     content-addressed cache and only misses hit the client (the
-    reference's resume semantics, strengthened per cache.py).
+    reference's resume semantics, strengthened per cache.py). The
+    chunks are resolved eagerly, here, and the fresh answers appended
+    to the cache before the reduce is returned.
     With ``max_cost_usd``, the pre-flight token estimate gates
     execution: if the corpus would cost more than the budget for
     ``model``, raise CostCapExceeded before a single call is made."""
@@ -123,26 +134,20 @@ def map_reduce_llm(
             )
 
     if cache_dir is None:
-        results = llm_map(chunks, prompt, client, concurrency=concurrency)
-        return reduce_ordered(results, sep=sep)
+        return reduce_ordered(llm_map(chunks, prompt, client, concurrency=concurrency), sep=sep)
 
-    keyed = chunks.withColumn("cache_key", cache_key_col("chunk_text", prompt, model))
-    cache = read_cache(spark, cache_dir)
-    hits, misses = split_cached(keyed, cache)
-
-    fresh = llm_map(misses, prompt, client, concurrency=concurrency).join(
-        keyed.select("doc_id", "chunk_id", "cache_key"), ["doc_id", "chunk_id"]
+    keyed = chunks.select(
+        "doc_id", "chunk_id", "chunk_text",
+        cache_key_col("chunk_text", prompt, model).alias("cache_key"),
     )
-    # persist before both uses (cache append + reduce) so the LLM runs once
-    fresh = fresh.persist()
-    if fresh.take(1):
-        append_cache(fresh, cache_dir)
-
-    all_results = hits.select("doc_id", "chunk_id", "result").unionByName(
-        fresh.select("doc_id", "chunk_id", "result")
+    probed = probe_cache(keyed, read_cache(spark, cache_dir))
+    resolved = (
+        llm_map(probed, prompt, client, concurrency=concurrency)
+        .select("doc_id", "chunk_id", "cache_key", "result", "fresh")
+        .localCheckpoint()
     )
-    out = reduce_ordered(all_results, sep=sep)
-    return out
+    append_cache(resolved.filter("fresh"), cache_dir)
+    return reduce_ordered(resolved, sep=sep)
 
 
 def process_text(
@@ -177,11 +182,12 @@ def process_text(
 
 def write_text_sink(result: DataFrame, path: str) -> None:
     """Ordered text sink (reference internal/cli/mapreduce.go:139-146):
-    one output file, rows in doc order."""
+    one output file, rows in doc order. One task writes either way, so
+    the rows go to one partition and sort there: no range-sampling job."""
     (
-        result.orderBy("doc_id")
+        result.repartition(1)
+        .sortWithinPartitions("doc_id")
         .select(F.col("result").alias("value"))
-        .coalesce(1)
         .write.mode("overwrite")
         .text(path)
     )

@@ -7,16 +7,28 @@
 - API error propagation (:234-260)
 - empty input tolerance (:280-301)
 - cache cleanup (:303-355)
+
+plus the single-pass shape of the cached path: one chunker read, calls
+overlapped within a task, no call sent after the first failure.
 """
 
 from __future__ import annotations
 
 import os
+import pickle
+import sys
+import threading
+import time
 
 import pytest
 
 from mapreduce_llm_spark.operators.cache import clean_cache, read_cache
-from mapreduce_llm_spark.operators.llm_map import FailingChatClient, FakeChatClient
+from mapreduce_llm_spark.operators.llm_map import (
+    CALLS_IN_FLIGHT_PER_TASK,
+    FailingChatClient,
+    FakeChatClient,
+    RateLimitedClient,
+)
 from mapreduce_llm_spark.operators.pipeline import (
     CostEstimate,
     map_reduce_llm,
@@ -129,6 +141,146 @@ def test_text_sink(spark, tmp_path):
     assert content == ["kitchen pan", "kitchen pot"]
 
 
+def test_text_sink_one_file_in_doc_order_from_many_partitions(spark, tmp_path):
+    res = spark.createDataFrame(
+        [(i, f"r{i}") for i in (5, 2, 9, 0, 7, 3)], "doc_id long, result string"
+    ).repartition(3)
+    assert res.rdd.getNumPartitions() == 3
+    out_dir = str(tmp_path / "out")
+    write_text_sink(res, out_dir)
+    files = [f for f in os.listdir(out_dir) if f.startswith("part-")]
+    assert len(files) == 1
+    content = open(os.path.join(out_dir, files[0])).read().split("\n")
+    assert content == ["r0", "r2", "r3", "r5", "r7", "r9", ""]
+
+
+def test_duplicate_chunks_do_not_multiply_on_resume(spark, tmp_path):
+    """Two documents with the same text share one cache key: the first
+    run calls and stores it once, and a cache holding the key twice (two
+    tasks that each answered it) still resumes to one result per chunk."""
+    cache_dir = str(tmp_path / "cache")
+    docs = spark.createDataFrame(
+        [(1, "alpha kitchen\nbeta"), (2, "alpha kitchen\nbeta")], "doc_id long, text string"
+    )
+    first = map_reduce_llm(
+        docs, "p", FakeChatClient("kitchen"), cache_dir=cache_dir, concurrency=1
+    )
+    assert {r["doc_id"]: r["result"] for r in first.collect()} == {
+        1: "alpha kitchen", 2: "alpha kitchen"
+    }
+    stored = spark.read.parquet(cache_dir)
+    assert stored.count() == 1
+    spark.createDataFrame(stored.collect(), stored.schema).write.mode("append").parquet(
+        cache_dir
+    )
+    assert spark.read.parquet(cache_dir).count() == 2
+    assert read_cache(spark, cache_dir).count() == 1
+
+    resumed = map_reduce_llm(docs, "p", FailingChatClient(), cache_dir=cache_dir)
+    assert {r["doc_id"]: r["result"] for r in resumed.collect()} == {
+        1: "alpha kitchen", 2: "alpha kitchen"
+    }
+
+
+def test_cached_run_feeds_each_document_to_the_chunker_once(spark, tmp_path, monkeypatch):
+    """With a partly filled cache, the pipeline and its sink read every
+    corpus row into the chunker exactly once: the probe, the LLM fill,
+    the cache append and the reduce share one chunker run."""
+    from mapreduce_llm_spark.operators import pipeline
+
+    cache_dir = str(tmp_path / "cache")
+    docs = spark.createDataFrame(
+        [(i, f"kitchen item {i}\nother {i}") for i in range(6)], "doc_id long, text string"
+    )
+    map_reduce_llm(docs.filter("doc_id < 3"), "f", FakeChatClient("kitchen"), cache_dir=cache_dir)
+
+    rows = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for b in batches:
+            rows.add(b.num_rows)
+            yield b
+
+    original = pipeline.chunk_documents
+    monkeypatch.setattr(
+        pipeline,
+        "chunk_documents",
+        lambda d, *a, **kw: original(d.mapInArrow(tap, d.schema), *a, **kw),
+    )
+    out_dir = str(tmp_path / "out")
+    write_text_sink(
+        map_reduce_llm(docs, "f", FakeChatClient("kitchen"), cache_dir=cache_dir), out_dir
+    )
+    assert rows.value == 6
+    (part,) = [f for f in os.listdir(out_dir) if f.startswith("part-")]
+    assert open(os.path.join(out_dir, part)).read().split("\n")[:6] == [
+        f"kitchen item {i}" for i in range(6)
+    ]
+
+
+def test_calls_overlap_within_one_task(spark):
+    """A one-partition input still keeps several calls in flight, and
+    never more than the per-task bound."""
+
+    class PeakClient:
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.inflight = 0
+
+        def __reduce__(self):  # a lock does not pickle: rebuild in the worker
+            return (type(self), ())
+
+        def generate(self, system, user):
+            with self.lock:
+                self.inflight += 1
+                now = self.inflight
+            time.sleep(0.05)
+            with self.lock:
+                self.inflight -= 1
+            return str(now)
+
+    docs = spark.createDataFrame(
+        [(i, f"line {i}") for i in range(40)], "doc_id long, text string"
+    ).coalesce(1)
+    peak = max(int(r["result"]) for r in map_reduce_llm(docs, "p", PeakClient()).collect())
+    assert 1 < peak <= CALLS_IN_FLIGHT_PER_TASK
+
+
+def test_first_failure_stops_sending_calls(spark, tmp_path):
+    """A client that fails on call j of a one-task batch fails the job
+    after at most j + CALLS_IN_FLIGHT_PER_TASK - 1 calls: the calls
+    already in flight finish, no queued call is sent."""
+    j, n_chunks = 5, 60
+    log = str(tmp_path / "calls.log")
+
+    class FailOnCall:
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.n = 0
+
+        def __reduce__(self):
+            return (type(self), ())
+
+        def generate(self, system, user):
+            with self.lock:
+                self.n += 1
+                n = self.n
+            with open(log, "a") as fh:
+                fh.write(f"{n}\n")
+            if n == j:
+                raise RuntimeError("call j failed")
+            time.sleep(0.05)
+            return user
+
+    docs = spark.createDataFrame(
+        [(i, f"line {i}") for i in range(n_chunks)], "doc_id long, text string"
+    )
+    with pytest.raises(Exception, match="call j failed"):
+        map_reduce_llm(docs, "p", FailOnCall(), concurrency=1).collect()
+    calls = len(open(log).read().split())
+    assert j <= calls <= j + CALLS_IN_FLIGHT_PER_TASK - 1
+
+
 def test_semantic_classify_and_extract(spark):
     docs = spark.createDataFrame(
         [(1, "good kitchen pan"), (2, "bad phone case")], "doc_id long, text string"
@@ -200,6 +352,41 @@ def test_rate_limited_client_spaces_calls():
         c.generate("s", "line")
     # first call free, then 0.5s spacing each
     assert slept == [0.5, 0.5]
+
+
+def test_rate_limited_client_spacing_holds_across_threads():
+    """A task's threads share one client: each call still gets its own
+    slot, 1 / max_per_second after the previous one. The clock stands
+    still, so each recorded sleep is the slot a call was granted."""
+    c = pickle.loads(pickle.dumps(RateLimitedClient(FakeChatClient(), max_per_second=4.0)))
+    slept = []
+
+    def sleep(s):
+        slept.append(s)
+        time.sleep(0)  # hand the interpreter to another thread mid-call
+
+    c.clock, c.sleep = (lambda: 0.0), sleep
+    n_threads, per_thread = 8, 100
+    start = threading.Barrier(n_threads)
+
+    def work():
+        start.wait()
+        for _ in range(per_thread):
+            c.generate("s", "line")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    # the first call is free; every later one waits for a distinct slot
+    assert sorted(slept) == [0.25 * k for k in range(1, n_threads * per_thread)]
 
 
 def test_cost_cap_blocks_before_any_call(spark):
