@@ -200,7 +200,6 @@ def minhash_near_dup_pairs(
     bands: int = 8,
     shingle_k: int = 3,
     max_bucket_size: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
@@ -218,11 +217,8 @@ def minhash_near_dup_pairs(
     are either found in another band or are not near-dups at the
     threshold with overwhelming probability); ``None`` disables.
 
-    ``materialize=True`` (default) eagerly computes the pair set and
-    releases the internal shingle cache before returning — the
-    leak-free contract every caller wants. ``materialize=False``
-    returns the lazy plan (for plan inspection / tests) and hands the
-    caller the cache to release via ``out.cached_base.unpersist()``.
+    The pair set is computed eagerly and the internal shingle cache is
+    released before returning, so no cache outlives the call.
     """
     rows = num_hashes // bands
     # shingles carried as 64-bit fingerprints: minhash seeds and the
@@ -292,16 +288,11 @@ def minhash_near_dup_pairs(
     # checkpointed blocks are reaped by the ContextCleaner on GC; at
     # cluster scale localCheckpoint is non-replicated, so swap for a
     # reliable checkpoint dir if executor loss must not fail the job.
-    if materialize:
-        # serialized storage: the near-dup pair set scales with corpus
-        # duplicate density (the q_graph_bfs round-12 SF-scaling-
-        # checkpoint rule; MEMORY_AND_DISK is serialized in PySpark)
-        out = out.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        base.unpersist()
-    else:
-        out.cached_base = base
+    # Serialized storage: the near-dup pair set scales with corpus
+    # duplicate density (the q_graph_bfs round-12 SF-scaling-checkpoint
+    # rule; MEMORY_AND_DISK is serialized in PySpark).
+    out = out.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    base.unpersist()
     return out
 
 
@@ -313,7 +304,6 @@ def ngram_jaccard_pairs(
     *,
     threshold: float = 0.2,
     shingle_k: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard within blocking groups (id_a < id_b).
 
@@ -374,18 +364,9 @@ def ngram_jaccard_pairs(
         .select("id_a", "id_b", F.round("jaccard_sim", 4).alias("jaccard_sim"))
     )
     # see minhash_near_dup_pairs: eager-materialize the small pair set,
-    # release the shingle cache deterministically inside the operator;
-    # materialize=False keeps the lazy plan for inspection.
-    if materialize:
-        # serialized storage: the near-dup pair set scales with corpus
-        # duplicate density (the q_graph_bfs round-12 SF-scaling-
-        # checkpoint rule; MEMORY_AND_DISK is serialized in PySpark)
-        out = out.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-        base.unpersist()
-    else:
-        out.cached_base = base
+    # release the shingle cache deterministically inside the operator
+    out = out.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    base.unpersist()
     return out
 
 

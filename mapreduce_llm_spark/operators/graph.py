@@ -7,9 +7,10 @@ Algorithm: alternating min-neighbor propagation and pointer jumping
 the standard O(log diameter) dataflow CC. Each iteration is ONE
 hash-shuffle join of a message table against the label map plus one
 keyed aggregate (round-15; previously three joins); the driver loop
-stops at fixpoint. Lineage is
-truncated with ``localCheckpoint`` every few iterations (see
-``checkpoint_every``) — the per-iteration plan is otherwise identical.
+stops at fixpoint and raises if ``max_iter`` rounds end before it.
+Lineage is truncated with ``localCheckpoint`` every
+``CC_CHECKPOINT_EVERY`` iterations — the per-iteration plan is
+otherwise identical.
 
 Oracle strategy (q_graph_components): on the consecutive-event graph
 (edges between successive events of a user ≤ 30 min apart) connected
@@ -25,21 +26,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+# connected_components truncates lineage with localCheckpoint every
+# this many iterations. Without it the plan grows by two joins per
+# round until planning cost (and driver heap, for the plan tree alone)
+# blows up — observed as an OOM after ~10 un-checkpointed rounds even
+# on a 64-node graph.
+CC_CHECKPOINT_EVERY = 5
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, checkpoint_every: int = 5
-) -> DataFrame:
+
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(src, dst) edge list (undirected; long ids) → (node, component)
     where component = min node id reachable. Isolated nodes are absent
     from the edge list and so from the output — union them in if the
     caller's node set is wider.
 
-    ``checkpoint_every`` truncates lineage with localCheckpoint every N
-    iterations. The plan otherwise grows by two joins per round until
-    planning cost (and driver heap, for the plan tree alone) blows up —
-    observed as an OOM after ~10 un-checkpointed rounds even on a
-    64-node graph. On by default; 0 disables.
+    ``max_iter`` bounds the rounds; labels still changing after the
+    last one raise ``RuntimeError`` rather than return unconverged
+    components. Propagation plus pointer jumping converges in
+    O(log diameter) rounds: a 4096-node path needs fewer than 25.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -112,7 +119,7 @@ def connected_components(
         cached.unpersist()
         cached = stamped
         labels = stamped.select("node", "label")
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
+        if (it + 1) % CC_CHECKPOINT_EVERY == 0:
             # localCheckpoint returns a NEW DataFrame backed by the
             # checkpoint files; drop the superseded generation's cache
             # (eager by default, so the data is safe before unpersist) —
@@ -132,6 +139,12 @@ def connected_components(
             labels = checkpointed
         if changed == 0:
             break
+    else:
+        cached.unpersist()
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            f"rounds: {changed} labels still changing"
+        )
 
     return labels.select("node", F.col("label").alias("component"))
 
@@ -143,7 +156,6 @@ def pagerank(
     *,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a (src, dst) directed edge list →
     (node, rank), ranks summing to 1.
@@ -157,13 +169,13 @@ def pagerank(
       formulation; their aggregate mass is a 1-row sum redistributed
       uniformly each iteration, keeping sum(rank)=1 exactly (pinned to
       a numpy power-iteration reference in tests/test_graph.py).
-    - **Lineage truncation EVERY iteration** (checkpoint_every=1, a
-      stricter default than connected_components): each iteration's
-      plan references the previous ranks THREE times (dangling-mass
-      branch, contribution branch, final node join), so un-truncated
-      lineage re-executes 3^k plans — measured 46 s for 10 iterations
-      on a 6 k-edge graph with checkpoint_every=5, 3 s with 1. The
-      checkpoint materializes only O(|nodes|) rows.
+    - **Lineage truncation EVERY iteration** (stricter than
+      connected_components): each iteration's plan references the
+      previous ranks THREE times (dangling-mass branch, contribution
+      branch, final node join), so un-truncated lineage re-executes
+      3^k plans — measured 46 s for 10 iterations on a 6 k-edge graph
+      checkpointing every 5th iteration, 3 s checkpointing every one.
+      The checkpoint materializes only O(|nodes|) rows.
     - The out-degree table is computed once and persisted — it is
       static across iterations.
     """
@@ -178,7 +190,7 @@ def pagerank(
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
 
-    for it in range(iterations):
+    for _ in range(iterations):
         contrib_src = ranks.join(outdeg, ranks.node == outdeg.src, "left")
         # dangling mass: rank of nodes with no out-edges (outdeg null)
         dangling = (
@@ -204,12 +216,11 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            # serialized storage for the per-node rank frame — the
-            # same SF-scaling-checkpoint rule as connected_components
-            ranks = ranks.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
+        # serialized storage for the per-node rank frame — the same
+        # SF-scaling-checkpoint rule as connected_components
+        ranks = ranks.localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
     nodes.unpersist()
     outdeg.unpersist()
     return ranks

@@ -32,9 +32,11 @@ full hash-repartition of every column by pid plus a second full sort
 sorted). One range shuffle + one sort total, then a broadcast join of
 the ~one-row-per-partition offsets — versus the naive plan's single
 shuffle of EVERYTHING to one task. At 100 TB the former completes; the
-latter does not. The window form survives only under
-``materialize=False``, where no barrier freezes the row order and the
-mono-id shortcut would be unsound.
+latter does not.
+
+``global_row_number`` is ``partitioned_row_number`` with no keys: one
+construction serves both, and ``global_prefix_sum`` shares its offsets
+window.
 """
 
 from __future__ import annotations
@@ -45,7 +47,6 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
 _PID = "__mrs_pid"
-_LOCAL_RN = "__mrs_local_rn"
 _OFFSET = "__mrs_offset"
 _MONO = "__mrs_mono"
 _FIRST = "__mrs_first_mono"
@@ -73,9 +74,8 @@ def _guarded_first(group_desc: str) -> Column:
                         "mapreduce_llm_spark.operators.ranking: "
                         "monotonically_increasing_id is not consecutive "
                         f"within a {group_desc} (Spark contract drift?) — "
-                        "mono-id local ranks are unsound; use "
-                        "materialize=False (window form) or fix the "
-                        "id layout. group first/last/count: "
+                        "mono-id local ranks are unsound; fix the id "
+                        "layout. group first/last/count: "
                     ),
                     F.concat_ws(
                         "/",
@@ -91,13 +91,11 @@ def _guarded_first(group_desc: str) -> Column:
     )
 
 
-def _pid_stamped(parts: DataFrame, materialize: bool) -> DataFrame:
-    """Stamp ``spark_partition_id()`` and (by default) pin the frame
-    behind an EAGER non-replicated serialized ``localCheckpoint`` so
-    every downstream branch structurally reads the same blocks.
-
-    Caveats callers accept with ``materialize=True`` (the safe
-    default):
+def _pid_stamped(parts: DataFrame) -> DataFrame:
+    """Stamp ``spark_partition_id()`` and pin the frame behind an EAGER
+    non-replicated serialized ``localCheckpoint`` so every downstream
+    branch structurally reads the same blocks (the round-13 row-loss
+    post-mortem in :func:`global_row_number`). Caveats callers accept:
 
     - **Eager execution side effect**: merely CONSTRUCTING the plan
       runs a Spark job (the checkpoint materializes at call time),
@@ -112,46 +110,54 @@ def _pid_stamped(parts: DataFrame, materialize: bool) -> DataFrame:
       garbage-collected (Spark's ContextCleaner unpersists them); they
       are not explicitly unpersisted because the operator cannot know
       when the caller is done with the result.
-
-    ``materialize=False`` skips the barrier and is ONLY sound when the
-    caller can prove both branches will observe identical physical
-    partitioning (e.g. a test pinning the bug class, or a consumer
-    that immediately materializes itself); see the round-13 row-loss
-    post-mortem in the module docstring.
     """
-    with_pid = parts.withColumn(_PID, F.spark_partition_id())
-    if materialize:
-        with_pid = with_pid.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-    return with_pid
+    return parts.withColumn(_PID, F.spark_partition_id()).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
+
+
+def _offsets_window(partition_cols: list[str]) -> Window:
+    """Running sum over the rows BEFORE each physical partition, per
+    key. With no keys the prefix sum runs over one row per partition
+    (~32 rows), so a single-task window is correct by construction —
+    but an unpartitioned Window.orderBy makes Spark log "No Partition
+    Defined ... serious performance degradation" on every run, burying
+    real single-partition regressions in noise. Partition by
+    pmod(pid, 1) instead: always 0, so physically identical (one
+    partition), but column-dependent so Catalyst can't constant-fold
+    it out of the partition spec (a plain lit(0) gets folded and still
+    warns)."""
+    return (
+        Window.partitionBy(*(partition_cols or [F.pmod(F.col(_PID), F.lit(1))]))
+        .orderBy(_PID)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
 
 
 def global_row_number(
     df: DataFrame,
     order_cols: list[Column],
     alias: str = "row_num",
-    materialize: bool = True,
 ) -> DataFrame:
     """Total-order global row numbers via range partitioning + offset
-    prefix sum. ``order_cols`` must define a total order (include a
-    unique key as the last tie-break). Ranks are bigint — at the scale
-    this operator exists for, row counts exceed int32.
+    prefix sum: :func:`partitioned_row_number` with no keys.
+    ``order_cols`` must define a total order (include a unique key as
+    the last tie-break). Ranks are bigint — at the scale this operator
+    exists for, row counts exceed int32.
 
     The counts branch and the data branch MUST observe the same
     physical partitioning, so the pid-stamped frame is materialized
     ONCE (eager serialized localCheckpoint — see :func:`_pid_stamped`
-    for the eager-execution / non-replicated-block caveats and the
-    ``materialize=False`` escape hatch) and both branches read the
-    checkpointed blocks. Relying on exchange reuse to collapse the two
-    reads is NOT sound: Catalyst prunes each branch's columns
-    independently (counts needs only the pid), the differing
-    ReadSchema defeats reuse, and AQE then coalesces the two range
-    shuffles to DIFFERENT partition counts — the inner join on pid
-    silently dropped ~half the rows the first time a consumer put a
-    wide projection behind an upstream join (q_kruskal_wallis staging,
-    round 13; nondeterministic row loss at sf0.1). Correctness here
-    cannot depend on the optimizer choosing to share a subtree.
+    for the eager-execution / non-replicated-block caveats) and both
+    branches read the checkpointed blocks. Relying on exchange reuse
+    to collapse the two reads is NOT sound: Catalyst prunes each
+    branch's columns independently (counts needs only the pid), the
+    differing ReadSchema defeats reuse, and AQE then coalesces the two
+    range shuffles to DIFFERENT partition counts — the inner join on
+    pid silently dropped ~half the rows the first time a consumer put
+    a wide projection behind an upstream join (q_kruskal_wallis
+    staging, round 13; nondeterministic row loss at sf0.1). Correctness
+    here cannot depend on the optimizer choosing to share a subtree.
 
     With the barrier in place the local rank is read off
     ``monotonically_increasing_id()`` (pid in the high bits, position
@@ -159,65 +165,11 @@ def global_row_number(
     intra-partition order IS the range-sorted order), normalized
     against the per-partition ``min`` of the same id carried on the
     broadcast offsets row so the construction never hard-codes the bit
-    layout. That removes the full hash-repartition + second sort the
-    previous ``Window.partitionBy(pid)`` form paid (module docstring).
+    layout. That removes the full hash-repartition + second sort a
+    ``Window.partitionBy(pid)`` local rank would pay (module
+    docstring).
     """
-    parts = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    with_pid = _pid_stamped(parts, materialize)
-
-    # The prefix sum runs over one row per partition (~32 rows), so a
-    # single-task window is correct by construction — but an
-    # unpartitioned Window.orderBy makes Spark log "No Partition
-    # Defined ... serious performance degradation" on every run,
-    # burying real single-partition regressions in noise. Partition by
-    # pmod(pid, 1): always 0, so physically identical (one partition),
-    # but column-dependent so Catalyst can't constant-fold it out of
-    # the partition spec (a plain lit(0) gets folded and still warns).
-    off_w = (
-        Window.partitionBy(F.pmod(F.col(_PID), F.lit(1)))
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-
-    if materialize:
-        base = with_pid.withColumn(_MONO, F.monotonically_increasing_id())
-        # one tiny aggregate serves both the offsets (count) and the
-        # local-rank normalization (min mono id per partition); both
-        # branches scan the SAME checkpointed blocks, so the mono ids
-        # agree by construction. max rides along to feed the
-        # consecutiveness guard (_guarded_first).
-        counts = base.groupBy(_PID).agg(
-            F.count(F.lit(1)).alias("count"),
-            F.min(_MONO).alias(_FIRST),
-            F.max(_MONO).alias(_LAST),
-        )
-        offsets = counts.select(
-            _PID,
-            _guarded_first("physical partition"),
-            F.coalesce(F.sum("count").over(off_w), F.lit(0)).alias(_OFFSET),
-        )
-        return (
-            base.join(F.broadcast(offsets), _PID)
-            .withColumn(
-                alias,
-                (
-                    F.col(_MONO) - F.col(_FIRST) + 1 + F.col(_OFFSET)
-                ).cast("bigint"),
-            )
-            .drop(_PID, _MONO, _FIRST, _OFFSET)
-        )
-
-    counts = with_pid.groupBy(_PID).count()
-    offsets = counts.select(
-        _PID, F.coalesce(F.sum("count").over(off_w), F.lit(0)).alias(_OFFSET)
-    )
-    local_w = Window.partitionBy(_PID).orderBy(*order_cols)
-    return (
-        with_pid.withColumn(_LOCAL_RN, F.row_number().over(local_w))
-        .join(F.broadcast(offsets), _PID)
-        .withColumn(alias, (F.col(_LOCAL_RN) + F.col(_OFFSET)).cast("bigint"))
-        .drop(_PID, _LOCAL_RN, _OFFSET)
-    )
+    return partitioned_row_number(df, [], order_cols, alias)
 
 
 def partitioned_row_number(
@@ -225,16 +177,16 @@ def partitioned_row_number(
     partition_cols: list[str],
     order_cols: list[Column],
     alias: str = "row_num",
-    materialize: bool = True,
 ) -> DataFrame:
     """``row_number() OVER (PARTITION BY keys ORDER BY ...)`` for the
     LOW-CARDINALITY-KEY / HUGE-PARTITION case — the skew shape where
     the plain keyed window still funnels each key's entire data
     through one task (e.g. rank all customers within each of 7 years:
-    7 tasks carry everything). Same two-phase construction as
-    :func:`global_row_number`, with the partition keys prepended to
-    the range-partitioning columns so a key's rows stay contiguous
-    across range partitions:
+    7 tasks carry everything). The two-phase construction (barrier and
+    mono-id rationale in :func:`global_row_number`, which calls this
+    with no keys), with the partition keys prepended to the
+    range-partitioning columns so a key's rows stay contiguous across
+    range partitions:
 
     1. range-partition by (keys, order) and sort within partitions;
     2. rank locally per (physical partition, key);
@@ -266,58 +218,37 @@ def partitioned_row_number(
     parts = df.repartitionByRange(*keys, *order_cols).sortWithinPartitions(
         *keys, *order_cols
     )
-    # materialized once for the same reason as global_row_number: the
-    # counts and data branches must see ONE physical partitioning, and
-    # exchange reuse (defeated by per-branch column pruning) is not a
-    # correctness mechanism (_pid_stamped docstring has the caveats)
-    with_pid = _pid_stamped(parts, materialize)
-
-    off_w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    with_pid = _pid_stamped(parts)
+    # within a checkpointed partition the rows of one key group are
+    # contiguous and range-sorted, so local rank = mono id minus the
+    # group's min mono id (carried on the broadcast row). One tiny
+    # aggregate serves both the offsets (count) and that normalization;
+    # both branches scan the SAME checkpointed blocks, so the mono ids
+    # agree by construction. max rides along to feed the
+    # consecutiveness guard (_guarded_first).
+    base = with_pid.withColumn(_MONO, F.monotonically_increasing_id())
+    counts = base.groupBy(_PID, *partition_cols).agg(
+        F.count(F.lit(1)).alias("count"),
+        F.min(_MONO).alias(_FIRST),
+        F.max(_MONO).alias(_LAST),
     )
-
-    if materialize:
-        # same mono-id construction as global_row_number: within a
-        # checkpointed partition the rows of one key group are
-        # contiguous and range-sorted, so local rank = mono id minus
-        # the group's min mono id (carried on the broadcast row)
-        base = with_pid.withColumn(_MONO, F.monotonically_increasing_id())
-        counts = base.groupBy(_PID, *partition_cols).agg(
-            F.count(F.lit(1)).alias("count"),
-            F.min(_MONO).alias(_FIRST),
-            F.max(_MONO).alias(_LAST),
-        )
-        offsets = counts.select(
-            _PID,
-            *partition_cols,
-            _guarded_first("(partition, key) group"),
-            F.coalesce(F.sum("count").over(off_w), F.lit(0)).alias(_OFFSET),
-        )
-        return (
-            base.join(F.broadcast(offsets), [_PID, *partition_cols])
-            .withColumn(
-                alias,
-                (
-                    F.col(_MONO) - F.col(_FIRST) + 1 + F.col(_OFFSET)
-                ).cast("bigint"),
-            )
-            .drop(_PID, _MONO, _FIRST, _OFFSET)
-        )
-
-    counts = with_pid.groupBy(_PID, *partition_cols).count()
     offsets = counts.select(
         _PID,
         *partition_cols,
-        F.coalesce(F.sum("count").over(off_w), F.lit(0)).alias(_OFFSET),
+        _guarded_first(
+            "(partition, key) group" if partition_cols else "physical partition"
+        ),
+        F.coalesce(
+            F.sum("count").over(_offsets_window(partition_cols)), F.lit(0)
+        ).alias(_OFFSET),
     )
-    local_w = Window.partitionBy(_PID, *partition_cols).orderBy(*order_cols)
     return (
-        with_pid.withColumn(_LOCAL_RN, F.row_number().over(local_w))
-        .join(F.broadcast(offsets), [_PID, *partition_cols])
-        .withColumn(alias, (F.col(_LOCAL_RN) + F.col(_OFFSET)).cast("bigint"))
-        .drop(_PID, _LOCAL_RN, _OFFSET)
+        base.join(F.broadcast(offsets), [_PID, *partition_cols])
+        .withColumn(
+            alias,
+            (F.col(_MONO) - F.col(_FIRST) + 1 + F.col(_OFFSET)).cast("bigint"),
+        )
+        .drop(_PID, _MONO, _FIRST, _OFFSET)
     )
 
 
@@ -351,7 +282,6 @@ def global_prefix_sum(
     order_cols: list[Column],
     value_col: str,
     alias: str = "prefix_sum",
-    materialize: bool = True,
 ) -> DataFrame:
     """Distributed global running sum of ``value_col`` in ``order_cols``
     order — ``sum(v) OVER (ORDER BY ...)`` without the single-partition
@@ -380,17 +310,14 @@ def global_prefix_sum(
     used never (round-14 optimization, guide §2.4). Partition
     assignment (range boundaries) and per-partition totals are
     order-independent, so results are unchanged."""
-    parts = df.repartitionByRange(*order_cols)
-    with_pid = _pid_stamped(parts, materialize)
+    with_pid = _pid_stamped(df.repartitionByRange(*order_cols))
 
     totals = with_pid.groupBy(_PID).agg(F.sum(value_col).alias(_PTOTAL))
-    off_w = (
-        Window.partitionBy(F.pmod(F.col(_PID), F.lit(1)))
-        .orderBy(_PID)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     offsets = totals.select(
-        _PID, F.coalesce(F.sum(_PTOTAL).over(off_w), F.lit(0)).alias(_OFFSET)
+        _PID,
+        F.coalesce(F.sum(_PTOTAL).over(_offsets_window([])), F.lit(0)).alias(
+            _OFFSET
+        ),
     )
 
     local_w = (

@@ -328,52 +328,6 @@ def query_ivf_index(
     )
 
 
-def cosine_topk_np(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Brute-force cosine top-k scored in numpy via mapInPandas.
-
-    The JVM higher-order-function path (``cosine_topk``) folds element
-    by element — ideal at dim≈64, but the expression chain grows with
-    dimensionality. This variant moves each Arrow batch into one numpy
-    matmul, so per-row cost is a BLAS dot regardless of dim: the fast
-    path for 1k+-dim embeddings. Each task emits only its local top-k
-    (the partial TakeOrdered), so the final merge sees
-    k × n_partitions rows, not the corpus.
-    """
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-            out = pd.DataFrame({id_col: pdf[id_col], "cosine_sim": np.round(sims, 4)})
-            # same total order as the final orderBy — without the id
-            # tie-break, boundary ties at the local k-th row could keep
-            # a different id than the global sort would
-            yield out.sort_values(
-                ["cosine_sim", id_col], ascending=[False, True]
-            ).head(k)
-
-    schema = f"{id_col} long, cosine_sim double"
-    return (
-        embeddings.select(id_col, vec_col)
-        .mapInPandas(score, schema=schema)
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
 def cosine_self_pairs_blocked(
     embeddings: DataFrame,
     *,

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words, qdims
 from mapreduce_llm_spark.registry import query
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -1727,7 +1728,7 @@ def q_lm_generalization_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln class."""
     ws = load_table(spark, sf_dir, "documents").select(
         (F.col("doc_id") % 2).alias("half"),
-        _r10_words(F.col("text")).alias("words"),
+        alpha_words(F.col("text")).alias("words"),
     )
     bg = ws.select(
         "half",
@@ -1818,7 +1819,7 @@ def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_llm_spark.operators.ranking import global_row_number
 
     toks = load_table(spark, sf_dir, "documents").select(
-        F.explode(_r10_words(F.col("text"))).alias("w")
+        F.explode(alpha_words(F.col("text"))).alias("w")
     )
     vc = toks.groupBy("w").agg(F.count("*").cast("long").alias("n"))
     r = global_row_number(
@@ -1897,7 +1898,7 @@ def q_embed_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     number that says whether you need it). Integer-exact end to end:
     per-dim sums in int64, the squared-sum accumulation on
     HUGEINT/DECIMAL(38,0), one 128-bit integer division."""
-    q = _r9_qdims_local(spark, sf_dir)
+    q = qdims(spark, sf_dir)
     per_label = q.groupBy("label", "dim").agg(
         F.sum("qv").cast("long").alias("s"),
         F.sum(F.col("qv") * F.col("qv")).cast("long").alias("s2"),
@@ -1915,21 +1916,6 @@ def q_embed_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(mean2_num * 1000000 div (n * sum_norm2) AS BIGINT)"
         ).alias("anisotropy_e6"),
     ).orderBy("label")
-
-
-def _r9_qdims_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """e3-quantized (vec_id, label, dim, qv) — the q_kmeans_step idiom."""
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos", "x"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("pos") + 1).alias("dim"),
-        F.floor(F.col("x").cast("double") * 1000).cast("long").alias("qv"),
-    )
 
 
 @query(
@@ -2201,14 +2187,6 @@ def q_quarter_linearity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m3_bp",
         (F.col("m3_bp") > 4000).alias("hockeystick"),
     ).orderBy("yq")
-
-
-def _r10_words(col):
-    """Lowercased alpha word array — the shared tokenization of the
-    text queries (resolved at call time, used by the batch above)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2694,7 +2672,7 @@ def q_knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dist, neighbor, LABEL) into one int64 (dist ≤ 2.4e9 · 1e7
     headroom) so the neighbor's label decodes as pack % 10 — no
     struct argmin, no second join."""
-    q = _r9_qdims_local(spark, sf_dir).where(F.col("vec_id") % 50 == 0)
+    q = qdims(spark, sf_dir).where(F.col("vec_id") % 50 == 0)
     a = q.select(
         "dim", F.col("vec_id").alias("va"), F.col("label").alias("la"),
         F.col("qv").alias("qa"),
@@ -2947,7 +2925,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id", "source",
-            F.explode(_r10_words(F.col("text"))).alias("w"),
+            F.explode(alpha_words(F.col("text"))).alias("w"),
         )
         .groupBy("doc_id", "source", "w")
         .agg(F.count("*").cast("long").alias("n"))
@@ -3121,7 +3099,7 @@ def q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             (F.col("doc_id") % 2).alias("half"),
-            F.explode(_r10_words(F.col("text"))).alias("w"),
+            F.explode(alpha_words(F.col("text"))).alias("w"),
         )
         .groupBy("lang", "half", "w")
         .agg(F.count("*").cast("long").alias("n"))
@@ -3212,7 +3190,7 @@ def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = d.select(
         "source",
         F.md5(
-            F.array_join(F.slice(_r10_words(F.col("text")), 1, 2), " ")
+            F.array_join(F.slice(alpha_words(F.col("text")), 1, 2), " ")
         ).alias("pk"),
     )
     fam = p.groupBy("source", "pk").agg(F.count("*").cast("long").alias("c"))
@@ -3276,7 +3254,7 @@ def q_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     short-array rule: Spark's sequence(1, 0) DESCENDS where DuckDB's
     generate_series is empty."""
     ws = load_table(spark, sf_dir, "documents").select(
-        "source", _r10_words(F.col("text")).alias("words")
+        "source", alpha_words(F.col("text")).alias("words")
     )
     tri = ws.select(
         "source",

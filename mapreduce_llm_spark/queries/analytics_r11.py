@@ -48,18 +48,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words, qdims
 from mapreduce_llm_spark.registry import query
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-def _r11_words(col):
-    """Lowercased alpha word array — the shared tokenization of the
-    text queries (the _r10_words twin, kept module-local so the staged
-    modules stay import-independent)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
-
 
 @query(
     "q_filter_length_bias",
@@ -116,7 +108,7 @@ def q_filter_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "doc_id", "source", "n_chars",
-            F.explode(_r11_words(F.col("text"))).alias("w"),
+            F.explode(alpha_words(F.col("text"))).alias("w"),
         )
         .groupBy("doc_id", "source", "n_chars", "w")
         .agg(F.count("*").cast("long").alias("n"))
@@ -249,7 +241,7 @@ def q_data_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the q_mix_weights class)."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.groupBy("source").agg(
-        F.sum(F.size(_r11_words(F.col("text"))))
+        F.sum(F.size(alpha_words(F.col("text"))))
         .cast("long")
         .alias("n_tokens")
     )
@@ -309,7 +301,7 @@ def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.groupBy("lang")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
-            F.sum(F.size(_r11_words(F.col("text"))))
+            F.sum(F.size(alpha_words(F.col("text"))))
             .cast("long")
             .alias("n_words"),
             F.sum("n_chars").cast("long").alias("n_chars"),
@@ -1568,7 +1560,7 @@ def q_shingle_df_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram expansion as q_trigram_novelty; the mass share is a window
     over the 4-row band aggregate."""
     ws = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _r11_words(F.col("text")).alias("words")
+        "doc_id", alpha_words(F.col("text")).alias("words")
     )
     sh = ws.select(
         "doc_id",
@@ -1722,7 +1714,7 @@ def q_trigram_exclusivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     view). One distinct (source, trigram) set; source counts per
     trigram join back equi-keyed on the trigram."""
     ws = load_table(spark, sf_dir, "documents").select(
-        "source", _r11_words(F.col("text")).alias("words")
+        "source", alpha_words(F.col("text")).alias("words")
     )
     sh = ws.select(
         "source",
@@ -1992,7 +1984,7 @@ def q_prefix_length_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     so each doc contributes 4 (k, key) rows, and the only shuffle
     carries 40-char digests."""
     ws = load_table(spark, sf_dir, "documents").select(
-        _r11_words(F.col("text")).alias("words")
+        alpha_words(F.col("text")).alias("words")
     )
     keyed = ws.select(
         F.explode(
@@ -3377,22 +3369,6 @@ def q_discount_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _r11_qdims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """e3-quantized (vec_id, label, dim, qv) — module-local twin of the
-    r9/r10 helper so the staged module stays import-independent."""
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos", "x"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("pos") + 1).alias("dim"),
-        F.floor(F.col("x").cast("double") * 1000).cast("long").alias("qv"),
-    )
-
-
 _R11_QDIMS_SQL = """
         SELECT vec_id, label, dim, qv
         FROM (
@@ -3451,7 +3427,7 @@ def q_embed_participation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mean offset) — PR sees collapse even in a perfectly centered
     cloud. Scale: one keyed aggregation to |labels|·D rows, then a
     constant-size reaggregation."""
-    pd_ = _r11_qdims(spark, sf_dir).groupBy("label", "dim").agg(
+    pd_ = qdims(spark, sf_dir).groupBy("label", "dim").agg(
         F.sum("qv").cast("long").alias("s"),
         F.sum(F.col("qv") * F.col("qv")).cast("long").alias("s2"),
         F.count("*").cast("long").alias("n"),
@@ -3533,7 +3509,7 @@ def q_embed_centroid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the candidate stage is an equi-join on dim against a
     |labels|·D centroid leg — fanout |labels| per row, no NLJ, no
     driver collect."""
-    q = _r11_qdims(spark, sf_dir)
+    q = qdims(spark, sf_dir)
     cd = q.groupBy(F.col("label").alias("c_label"), "dim").agg(
         F.expr(
             "CAST(floor(CAST(sum(qv) AS DOUBLE)"
@@ -3625,7 +3601,7 @@ def q_embed_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     as one double expression. The global centroid is a post-aggregation
     window over the |labels|·D table. Scale: one keyed aggregation,
     constant-size window + reaggregation."""
-    pd_ = _r11_qdims(spark, sf_dir).groupBy("label", "dim").agg(
+    pd_ = qdims(spark, sf_dir).groupBy("label", "dim").agg(
         F.sum("qv").cast("long").alias("s"),
         F.sum(F.col("qv") * F.col("qv")).cast("long").alias("s2"),
         F.count("*").cast("long").alias("n"),
@@ -4114,7 +4090,7 @@ def q_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one explode + two keyed aggregations; the join runs on the
     per-source vocabulary, not the corpus."""
     ws = load_table(spark, sf_dir, "documents").select(
-        "source", _r11_words(F.col("text")).alias("words")
+        "source", alpha_words(F.col("text")).alias("words")
     )
     allw = ws.select(
         "source", F.explode("words").alias("w")

@@ -37,18 +37,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words
 from mapreduce_llm_spark.registry import query
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-
-def _r12_words(col):
-    """Lowercased alpha word array — the shared tokenization of the
-    text queries (the _r11_words twin, kept module-local so the staged
-    modules stay import-independent)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1300,7 +1292,7 @@ def q_hapax_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     wc = (
         d.select(
-            "source", F.explode(_r12_words(F.col("text"))).alias("w")
+            "source", F.explode(alpha_words(F.col("text"))).alias("w")
         )
         .groupBy("source", "w")
         .agg(F.count("*").cast("long").alias("n"))
@@ -1590,7 +1582,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.size(
                 F.filter(
-                    _r12_words(F.col("text")),
+                    alpha_words(F.col("text")),
                     lambda w: w.isin("the", "a", "and", "of", "in"),
                 )
             )
@@ -1758,7 +1750,7 @@ def q_vocab_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     wc = (
         d.select(
-            "lang", F.explode(_r12_words(F.col("text"))).alias("w")
+            "lang", F.explode(alpha_words(F.col("text"))).alias("w")
         )
         .groupBy("lang", "w")
         .agg(F.count("*").cast("long").alias("n"))
@@ -1829,7 +1821,7 @@ def q_word_stutter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CLAUDE.md sequence rule demands."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
-        "source", _r12_words(F.col("text")).alias("ws")
+        "source", alpha_words(F.col("text")).alias("ws")
     ).where(F.size("ws") >= 2)
     pairs = words.select(
         "source",
@@ -1907,7 +1899,7 @@ def q_word_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor per occurrence ((i−1)·10⁴ // (L−1), docs of ≥2 words);
     top-10 is a TakeOrderedAndProject with the word as tie-break."""
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(_r12_words(F.col("text")).alias("ws")).where(
+    words = d.select(alpha_words(F.col("text")).alias("ws")).where(
         F.size("ws") >= 2
     )
     positioned = words.select(
@@ -2053,7 +2045,7 @@ def q_context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     counted = d.select(
         "source",
-        F.size(_r12_words(F.col("text"))).cast("long").alias("n_words"),
+        F.size(alpha_words(F.col("text"))).cast("long").alias("n_words"),
     )
     expanded = counted.select(
         "source",

@@ -51,17 +51,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words
 from mapreduce_llm_spark.registry import query
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-def _r13_words(col):
-    """Lowercased alpha word array (the _r12_words twin, module-local
-    so the staged modules stay import-independent)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
-
 
 # ---------------------------------------------------------------------------
 # Tranche 1 — capacity and dormancy.
@@ -581,7 +574,7 @@ def q_word_len_by_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     one posexplode and one aggregation."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
-        "lang", _r13_words(F.col("text")).alias("ws")
+        "lang", alpha_words(F.col("text")).alias("ws")
     ).where(F.size("ws") >= 3)
     positioned = words.select(
         "lang",
@@ -651,7 +644,7 @@ def q_head_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     wc = (
         d.select(
-            "lang", F.explode(_r13_words(F.col("text"))).alias("w")
+            "lang", F.explode(alpha_words(F.col("text"))).alias("w")
         )
         .groupBy("lang", "w")
         .agg(F.count("*").cast("long").alias("n"))
@@ -1172,8 +1165,8 @@ def q_ttr_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode), exact integer bp pooling."""
     d = load_table(spark, sf_dir, "documents")
     per_doc = d.select(
-        F.size(_r13_words(F.col("text"))).cast("long").alias("n_words"),
-        F.size(F.array_distinct(_r13_words(F.col("text"))))
+        F.size(alpha_words(F.col("text"))).cast("long").alias("n_words"),
+        F.size(F.array_distinct(alpha_words(F.col("text"))))
         .cast("long")
         .alias("n_distinct"),
     ).where(F.col("n_words") >= 1)

@@ -20,16 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words
 from mapreduce_llm_spark.registry import query
 
-
-def _r14_words(col):
-    """Lowercased alpha word array — the shared tokenization of the
-    text queries (the _r13_words twin, kept module-local so the analytics
-    modules stay import-independent)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
 
 # ---------------------------------------------------------------------------
 # Tranche 1 — nonparametric / diagnostic statistics: the distribution-
@@ -655,7 +648,7 @@ def q_affix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix) tie-break both engines."""
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select(
-        "lang", F.explode(_r14_words(F.col("text"))).alias("w")
+        "lang", F.explode(alpha_words(F.col("text"))).alias("w")
     ).where(F.length("w") >= 5)
     suf = w.groupBy("lang", F.expr("right(w, 3)").alias("suffix")).agg(
         F.count("*").cast("long").alias("n")
@@ -729,7 +722,7 @@ def q_bigram_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     the asymmetry is an exact bp floor. Top-20 with the
     (total desc, pair) tie-break."""
     docs = load_table(spark, sf_dir, "documents")
-    w = docs.select(F.explode(_r14_words(F.col("text"))).alias("w")).where(
+    w = docs.select(F.explode(alpha_words(F.col("text"))).alias("w")).where(
         F.length("w") >= 2
     )
     bg = w.select(
@@ -822,7 +815,7 @@ def q_initial_letter_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     ini = (
         docs.select(
-            "lang", F.explode(_r14_words(F.col("text"))).alias("w")
+            "lang", F.explode(alpha_words(F.col("text"))).alias("w")
         )
         .groupBy("lang", F.expr("substr(w, 1, 1)").alias("letter"))
         .agg(F.count("*").cast("long").alias("n"))
@@ -905,7 +898,7 @@ def q_rare_word_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     loads are exact bp floors at both the doc and source level."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", "source", F.explode(_r14_words(F.col("text"))).alias("w")
+        "doc_id", "source", F.explode(alpha_words(F.col("text"))).alias("w")
     )
     dfq = tok.groupBy("w").agg(
         F.countDistinct("doc_id").cast("long").alias("df")
@@ -2563,7 +2556,7 @@ def q_packing_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivoted to rows (the q_session_threshold_sweep pattern — no
     grid cross); everything is exact integer ceil/floor division."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.size(_r14_words(F.col("text"))).cast("long").alias("tok"))
+    toks = docs.select(F.size(alpha_words(F.col("text"))).cast("long").alias("tok"))
     agg = toks.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("tok").cast("long").alias("total_tok"),
@@ -2633,7 +2626,7 @@ def q_source_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         "n_chars",
-        F.size(_r14_words(F.col("text"))).cast("long").alias("tok"),
+        F.size(alpha_words(F.col("text"))).cast("long").alias("tok"),
     )
     card = per_doc.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -2696,7 +2689,7 @@ def q_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     bp floors; the cumulative share is an ordered ROWS frame over the
     ≤10-row band frame (deterministic summation order)."""
     docs = load_table(spark, sf_dir, "documents")
-    ws = _r14_words(F.col("text"))
+    ws = alpha_words(F.col("text"))
     per_doc = docs.select(
         F.expr("least(n_chars div 64, CAST(9 AS BIGINT))").alias("band"),
         F.size(ws).cast("long").alias("tok"),
@@ -2819,7 +2812,7 @@ def q_lexical_rank_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", F.explode(_r14_words(F.col("text"))).alias("w")
+        "source", F.explode(alpha_words(F.col("text"))).alias("w")
     )
     vocab = tok.groupBy("w").agg(F.count("*").cast("long").alias("n"))
     ranked = global_row_number(

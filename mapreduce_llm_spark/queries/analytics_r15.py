@@ -21,16 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words
 from mapreduce_llm_spark.registry import query
-
-
-def _r15_words(col):
-    """Lowercased alpha word array — the shared tokenization of the
-    text queries (the _r14_words twin, kept module-local so the analytics
-    modules stay import-independent)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2628,7 +2620,7 @@ def q_embed_linf_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tranche 7 — corpus structure beyond frequency: source-spread of the
 # vocabulary, within-document word recurrence, document openers,
 # hapax placement, and TTR across document position. All share the
-# _r15_words tokenization (= regexp_split_to_array(lower, '[^a-z]+')
+# alpha_words tokenization (= regexp_split_to_array(lower, '[^a-z]+')
 # in DuckDB, the q_hapax_rate twin).
 # ---------------------------------------------------------------------------
 
@@ -2671,7 +2663,7 @@ def q_source_spread_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over the ≤20-row spectrum."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "source", F.explode(_r15_words(F.col("text"))).alias("w")
+        "source", F.explode(alpha_words(F.col("text"))).alias("w")
     )
     wc = toks.groupBy("w").agg(
         F.count("*").cast("long").alias("n_tokens"),
@@ -2752,7 +2744,7 @@ def q_word_recurrence_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = docs.select(
         "doc_id",
         "lang",
-        F.posexplode(_r15_words(F.col("text"))).alias("p0", "w"),
+        F.posexplode(alpha_words(F.col("text"))).alias("p0", "w"),
     ).select(
         "doc_id", "lang", "w", (F.col("p0") + 1).cast("long").alias("p")
     )
@@ -2826,7 +2818,7 @@ def q_doc_opener_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_starts DESC, word) tie-break; the lift join runs on the
     aggregated vocab frame; the 1-row totals leg broadcasts."""
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(_r15_words(F.col("text")).alias("ws"))
+    words = docs.select(alpha_words(F.col("text")).alias("ws"))
     openers = (
         words.filter(F.size("ws") >= 1)
         .groupBy(F.element_at("ws", 1).alias("w"))
@@ -2924,8 +2916,8 @@ def q_hapax_position(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "lang",
-            F.posexplode(_r15_words(F.col("text"))).alias("p0", "w"),
-            F.size(_r15_words(F.col("text"))).cast("long").alias("n"),
+            F.posexplode(alpha_words(F.col("text"))).alias("p0", "w"),
+            F.size(alpha_words(F.col("text"))).cast("long").alias("n"),
         )
         .filter(F.col("n") >= 2)
         .select(
@@ -3007,8 +2999,8 @@ def q_ttr_by_position(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "lang",
-            F.posexplode(_r15_words(F.col("text"))).alias("p0", "w"),
-            F.size(_r15_words(F.col("text"))).cast("long").alias("n"),
+            F.posexplode(alpha_words(F.col("text"))).alias("p0", "w"),
+            F.size(alpha_words(F.col("text"))).cast("long").alias("n"),
         )
         .filter(F.col("n") >= 3)
         .select(

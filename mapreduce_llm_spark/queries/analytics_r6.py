@@ -28,15 +28,10 @@ from mapreduce_llm_spark.operators.ranking import (
     global_prefix_sum,
     global_row_number,
 )
+from mapreduce_llm_spark.queries.common import ts_micros
 from mapreduce_llm_spark.registry import query
 
 _THIRTY_MIN_US = 30 * 60 * 1_000_000
-
-
-def _us(col):
-    """Microsecond epoch of an NTZ timestamp column (UTC session ⇒
-    value-preserving cast, the documented unix_micros gotcha)."""
-    return F.unix_micros(F.col(col).cast("timestamp"))
 
 
 @query(
@@ -219,7 +214,7 @@ def q_sessionize_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = F.lag("ts").over(w)
     new_sess = F.when(
         prev.isNull()
-        | ((_us("ts") - F.unix_micros(prev.cast("timestamp"))) > _THIRTY_MIN_US),
+        | ((ts_micros("ts") - F.unix_micros(prev.cast("timestamp"))) > _THIRTY_MIN_US),
         1,
     ).otherwise(0)
     run = w.rowsBetween(Window.unboundedPreceding, 0)

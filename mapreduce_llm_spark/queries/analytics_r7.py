@@ -32,15 +32,10 @@ from mapreduce_llm_spark.operators.ranking import (
     ntile_from_rank,
     partitioned_row_number,
 )
+from mapreduce_llm_spark.queries.common import ts_micros
 from mapreduce_llm_spark.registry import query
 
 _DAY_US = 86_400_000_000
-
-
-def _us(col: str):
-    """Microsecond epoch of an NTZ timestamp column (UTC session ⇒
-    value-preserving cast, the documented unix_micros gotcha)."""
-    return F.unix_micros(F.col(col).cast("timestamp"))
 
 
 @query(
@@ -76,7 +71,7 @@ def q_transition_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row total. All arithmetic is exact int64 (gap sums are
     microsecond integers; means are integer div)."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", _us("ts").alias("us")
+        "user_id", "event_id", "event_type", ts_micros("ts").alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     tr = (
@@ -196,7 +191,7 @@ def q_first_purchase_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on user_id; day bucketing is exact integer division of
     microsecond epochs."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_type", _us("ts").alias("us")
+        "user_id", "event_type", ts_micros("ts").alias("us")
     )
     v = (
         e.where(F.col("event_type") == "view")
@@ -957,7 +952,7 @@ def q_transition_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     × every transition in the corpus: the partitioned-ranking skew
     shape again, exact integer microseconds end-to-end."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", _us("ts").alias("us")
+        "user_id", "event_id", "event_type", ts_micros("ts").alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     g = (

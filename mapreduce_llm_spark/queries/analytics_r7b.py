@@ -23,13 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import ts_micros
 from mapreduce_llm_spark.registry import query
-
-
-def _us(col: str):
-    """Microsecond epoch of an NTZ timestamp column (UTC session ⇒
-    value-preserving cast, the documented unix_micros gotcha)."""
-    return F.unix_micros(F.col(col).cast("timestamp"))
 
 
 @query(
@@ -444,7 +439,7 @@ def q_markov_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-user lag windows (keyed), two tiny aggregates, one
     broadcast join — no global state."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", _us("ts").alias("us")
+        "user_id", "event_id", "event_type", ts_micros("ts").alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     tr = (
@@ -585,7 +580,7 @@ def q_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass + one tiny aggregate; TakeOrdered for the limit, no
     global sort."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", _us("ts").alias("us")
+        "user_id", "event_id", "event_type", ts_micros("ts").alias("us")
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     p = (

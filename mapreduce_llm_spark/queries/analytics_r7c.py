@@ -27,14 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import md5_40
 from mapreduce_llm_spark.registry import query
-
-
-def _md5_40(col):
-    """The house cross-engine 40-bit hash: Spark
-    conv(substring(md5(x),1,10),16,10) ≡ DuckDB
-    CAST('0x'||substr(md5(x),1,10) AS BIGINT)."""
-    return F.conv(F.substring(F.md5(col), 1, 10), 16, 10).cast("long")
 
 
 _FAIR_BUDGET_CENTS = 1_000_000  # 10,000.00 per nation
@@ -208,7 +202,7 @@ def q_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums move to DECIMAL(38,0) unchanged."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        (_md5_40(F.col("user_id").cast("string")) % 2).alias("variant"),
+        (md5_40(F.col("user_id").cast("string")) % 2).alias("variant"),
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vc"),
     )
     g = ev.groupBy("event_type").agg(
@@ -375,7 +369,7 @@ def q_bucket_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan collapses to ≤ 32 cells in one map-side-combinable
     aggregate; the share window runs on those 32 rows only."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        (_md5_40(F.col("l_orderkey").cast("string")) % 32)
+        (md5_40(F.col("l_orderkey").cast("string")) % 32)
         .cast("int")
         .alias("bucket")
     )
@@ -562,7 +556,7 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             "j",
             (
-                _md5_40(
+                md5_40(
                     F.concat(
                         F.col("o_custkey").cast("string"),
                         F.lit("#"),
@@ -653,7 +647,7 @@ def q_merkle_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_name",
             F.col("c_mktsegment").alias("segment"),
-            _md5_40(
+            md5_40(
                 F.concat(
                     F.col("c_custkey").cast("string"),
                     F.lit("|"),
@@ -675,11 +669,11 @@ def q_merkle_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     node = leaf.groupBy("n_name").agg(
-        F.sum(_md5_40(F.col("checksum").cast("string"))).alias("checksum"),
+        F.sum(md5_40(F.col("checksum").cast("string"))).alias("checksum"),
         F.sum("n_rows").alias("n_rows"),
     )
     root = node.agg(
-        F.sum(_md5_40(F.col("checksum").cast("string"))).alias("checksum"),
+        F.sum(md5_40(F.col("checksum").cast("string"))).alias("checksum"),
         F.sum("n_rows").alias("n_rows"),
     )
     out = (

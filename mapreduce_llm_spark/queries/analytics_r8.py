@@ -22,19 +22,15 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import md5_40
 from mapreduce_llm_spark.registry import query
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-
-def _md5_40(col: Column) -> Column:
-    """House cross-engine 40-bit hash (CLAUDE.md)."""
-    return F.conv(F.substring(F.md5(col), 1, 10), 16, 10).cast("long")
 
 
 @query(
@@ -65,7 +61,7 @@ def q_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates. One keyed aggregate collapses the corpus to
     |folds × langs| cells; the share window runs on those cells."""
     f = load_table(spark, sf_dir, "documents").select(
-        (_md5_40(F.col("doc_id").cast("string")) % 5).cast("int").alias("fold"),
+        (md5_40(F.col("doc_id").cast("string")) % 5).cast("int").alias("fold"),
         "lang",
     )
     c = f.groupBy("fold", "lang").agg(F.count("*").alias("n_docs"))
@@ -193,7 +189,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.lower("text"), "[^a-z]+"), lambda w: w != F.lit("")
     )
     fp = docs.select(
-        "source", _md5_40(F.array_join(words, " ")).alias("fp")
+        "source", md5_40(F.array_join(words, " ")).alias("fp")
     ).distinct()
     tot = fp.groupBy("source").agg(F.count("*").alias("n"))
     a = fp.select(F.col("source").alias("source_a"), "fp")
@@ -275,7 +271,7 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     type and run post-aggregation."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        (_md5_40(F.col("user_id").cast("string")) % 2).alias("variant"),
+        (md5_40(F.col("user_id").cast("string")) % 2).alias("variant"),
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vc"),
     )
     c = ev.groupBy("event_type", "vc").agg(
@@ -2066,7 +2062,7 @@ def q_erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     def audit(tbl: str, deleted_cnt, kept: DataFrame) -> DataFrame:
         cs = kept.agg(
             F.count("*").alias("n_remaining"),
-            F.sum(_md5_40(F.col("k").cast("string"))).alias(
+            F.sum(md5_40(F.col("k").cast("string"))).alias(
                 "survivors_checksum"
             ),
         )
@@ -2367,7 +2363,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"))
     )
     wh = wc.select(
-        "doc_id", "c", _md5_40(F.col("w")).alias("h")
+        "doc_id", "c", md5_40(F.col("w")).alias("h")
     )
     bits = (
         wh.select(
@@ -2489,7 +2485,7 @@ def q_countmin_err(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(3))).alias("r"),
     ).withColumn(
         "bucket",
-        _md5_40(F.expr("concat(cast(r AS STRING), ':', w)")) % 64,
+        md5_40(F.expr("concat(cast(r AS STRING), ':', w)")) % 64,
     )
     cells = hashed.groupBy("r", "bucket").agg(F.sum("true_n").alias("cell_n"))
     est = (
@@ -2575,7 +2571,7 @@ def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             (
-                _md5_40(F.expr("concat(cast(i AS STRING), ':', cast(k AS STRING))"))
+                md5_40(F.expr("concat(cast(i AS STRING), ':', cast(k AS STRING))"))
                 % 65536
             ).alias("p")
         )
@@ -2587,7 +2583,7 @@ def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence(F.lit(0), F.lit(2))).alias("i"),
     ).withColumn(
         "p",
-        _md5_40(F.expr("concat(cast(i AS STRING), ':', cast(c_custkey AS STRING))"))
+        md5_40(F.expr("concat(cast(i AS STRING), ':', cast(c_custkey AS STRING))"))
         % 65536,
     )
     hits = (
@@ -2813,7 +2809,7 @@ def q_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("y"),
     ).select(
-        (_md5_40(F.col("user_id").cast("string")) % 2).alias("variant"),
+        (md5_40(F.col("user_id").cast("string")) % 2).alias("variant"),
         "x",
         "y",
     )
@@ -2918,7 +2914,7 @@ def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust, cust["c_custkey"] == orders["o_custkey"]
     ).select(
         "c_mktsegment",
-        (_md5_40(F.col("c_custkey").cast("string")) % 2).alias("treated"),
+        (md5_40(F.col("c_custkey").cast("string")) % 2).alias("treated"),
         F.expr(
             "CASE WHEN o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'"
             " THEN 1 ELSE 0 END"
@@ -3579,7 +3575,7 @@ def q_inverted_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("doc_id").alias("df"),
         F.count("*").alias("cf"),
         F.sum(
-            _md5_40(
+            md5_40(
                 F.expr(
                     "concat(w, ':', cast(doc_id AS STRING), ':',"
                     " cast(pos AS STRING))"
@@ -3817,7 +3813,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     seeds = (
-        e.select("vec_id", _md5_40(F.col("vec_id").cast("string")).alias("h"))
+        e.select("vec_id", md5_40(F.col("vec_id").cast("string")).alias("h"))
         .orderBy("h", "vec_id")
         .limit(4)
         .select(
@@ -3856,7 +3852,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     uc = upd.groupBy("cluster").agg(
         F.sum(
-            _md5_40(
+            md5_40(
                 F.expr(
                     "concat(cast(cluster AS STRING), ':',"
                     " cast(dim AS STRING), ':', cast(mean_e3 AS STRING))"
@@ -3963,7 +3959,7 @@ def q_embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     seeds = (
-        e.select("vec_id", _md5_40(F.col("vec_id").cast("string")).alias("h"))
+        e.select("vec_id", md5_40(F.col("vec_id").cast("string")).alias("h"))
         .orderBy("h", "vec_id")
         .limit(4)
         .select(
@@ -4557,7 +4553,7 @@ def q_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         ),
         F.when(
-            _md5_40(F.col("o_orderkey").cast("string")) % 100 == 0, 1
+            md5_40(F.col("o_orderkey").cast("string")) % 100 == 0, 1
         )
         .otherwise(0)
         .alias("in_sample"),
@@ -4639,7 +4635,7 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "n_chars",
-        _md5_40(
+        md5_40(
             F.array_join(
                 F.expr("filter(split(lower(text), '[^a-z]+'), w -> w != '')"),
                 " ",

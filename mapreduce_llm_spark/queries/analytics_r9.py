@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import load_table
+from mapreduce_llm_spark.queries.common import alpha_words, qdims
 from mapreduce_llm_spark.registry import query
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -298,12 +299,6 @@ def q_churn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 _R9_TERMS = ("spark", "query", "join")
 
 
-def _r9_words(col):
-    return F.filter(
-        F.split(F.lower(col), "[^a-z]+"), lambda w: w != F.lit("")
-    )
-
-
 @query(
     "q_dedup_sortneighbor",
     oracle="""
@@ -468,11 +463,11 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(
             F.filter(
-                _r9_words(F.col("text")),
+                alpha_words(F.col("text")),
                 lambda w: w.isin(*_R9_TERMS),
             )
         ).alias("tf"),
-        F.size(_r9_words(F.col("text"))).alias("nw"),
+        F.size(alpha_words(F.col("text"))).alias("nw"),
     )
     s = d.select(
         "doc_id",
@@ -557,7 +552,7 @@ def q_snippet_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pack < 0) drop out. Everything stays keyed by doc_id — no global
     ordering, no pair expansion."""
     ws = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _r9_words(F.col("text")).alias("words")
+        "doc_id", alpha_words(F.col("text")).alias("words")
     )
     t = ws.select(
         "doc_id",
@@ -640,7 +635,7 @@ def q_text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     allowlisted broadcast 1-row leg."""
     toks = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(_r9_words(F.col("text"))).alias("w"))
+        .select("doc_id", F.explode(alpha_words(F.col("text"))).alias("w"))
     )
     per_doc = toks.groupBy("w", "doc_id").agg(F.count("*").alias("x"))
     totals = (
@@ -1580,23 +1575,6 @@ def q_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _r9_qdims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, label, dim, qv): embeddings quantized to e3 integers —
-    the exact-arithmetic idiom of q_kmeans_step/q_embed_pq (FLOAT →
-    DOUBLE cast first, floor, no rounding)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos", "x"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("pos") + 1).alias("dim"),
-        F.floor(F.col("x").cast("double") * 1000).cast("long").alias("qv"),
-    )
-
-
 _R9_QDIMS_SQL = """
         SELECT vec_id, label, dim, qv
         FROM (
@@ -1649,7 +1627,7 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax is hash-stable. Ranking is a keyed (per-label) window —
     no global ordering; the centroid sums are one partial-aggregated
     pass."""
-    q = _r9_qdims(spark, sf_dir)
+    q = qdims(spark, sf_dir)
     cs = q.groupBy("label", "dim").agg(
         F.sum("qv").cast("long").alias("s"),
         F.countDistinct("vec_id").cast("long").alias("n"),
@@ -1714,7 +1692,7 @@ def q_sign_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs quadratic is excluded by the sample × block structure,
     and every statistic is integer-exact (agreement in bp via integer
     div over n_pairs·64 dims)."""
-    q = _r9_qdims(spark, sf_dir).where(F.col("vec_id") % 25 == 0)
+    q = qdims(spark, sf_dir).where(F.col("vec_id") % 25 == 0)
     a = q.select("label", "dim", F.col("vec_id").alias("va"), F.col("qv").alias("qa"))
     b = q.select("label", "dim", F.col("vec_id").alias("vb"), F.col("qv").alias("qb"))
     p = (
@@ -1795,7 +1773,7 @@ def q_cosine_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     float cosine: cos ≥ t  ⟺  dot > 0 ∧ dot²·1e8 ≥ t_e4²·‖a‖²·‖b‖²,
     evaluated in 128-bit integers (HUGEINT / DECIMAL(38,0) — the
     products reach ~1e25). The grid is a broadcast 5-row leg."""
-    q = _r9_qdims(spark, sf_dir).where(F.col("vec_id") % 10 == 0)
+    q = qdims(spark, sf_dir).where(F.col("vec_id") % 10 == 0)
     n2 = q.groupBy("vec_id", "label").agg(
         F.sum(F.col("qv") * F.col("qv")).cast("long").alias("nn")
     )
@@ -2916,7 +2894,7 @@ def q_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops = ["the", "and", "of", "to", "in", "is", "that", "for", "with", "as"]
     t = (
         load_table(spark, sf_dir, "documents")
-        .select("doc_id", _r9_words(F.col("text")).alias("words"))
+        .select("doc_id", alpha_words(F.col("text")).alias("words"))
         .select("doc_id", F.posexplode("words").alias("pos", "w"))
         .select(
             "doc_id",
@@ -3013,7 +2991,7 @@ def q_word_len_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero vocabulary. One explode + keyed aggregate; shares are exact
     basis points off a window over the |langs × 4| cells."""
     w = load_table(spark, sf_dir, "documents").select(
-        "lang", F.explode(_r9_words(F.col("text"))).alias("w")
+        "lang", F.explode(alpha_words(F.col("text"))).alias("w")
     )
     b = w.select(
         "lang",
@@ -3681,7 +3659,7 @@ def q_lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary axis); Jaccard in exact basis points."""
     v = (
         load_table(spark, sf_dir, "documents")
-        .select("lang", F.explode(_r9_words(F.col("text"))).alias("w"))
+        .select("lang", F.explode(alpha_words(F.col("text"))).alias("w"))
         .distinct()
     )
     sz = v.groupBy("lang").agg(F.count("*").cast("long").alias("n"))

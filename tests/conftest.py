@@ -19,3 +19,16 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def spark():
     spark = get_spark(app_name="mapreduce_llm_spark-tests")
     yield spark
+
+
+def last_executed_plan(spark) -> str:
+    """``physicalPlanDescription`` of the newest SQL execution in the
+    session's status store (recorded with ``spark.ui.enabled=false``
+    too). Lets a test inspect the plan an operator actually ran — an
+    eager ``localCheckpoint`` job's description includes the whole
+    persisted subplan, Python UDF nodes included. The listener bus is
+    drained first so the store has seen that execution's events."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    # the store's view iterates in executionId order
+    return executions.last().physicalPlanDescription()

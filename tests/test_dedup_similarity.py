@@ -221,22 +221,6 @@ def test_ivf_partial_probe_has_high_recall(spark):
     assert len(exact & approx) >= 5
 
 
-def test_numpy_scorer_matches_jvm_scorer(spark):
-    """The BLAS-vectorized scorer must rank identically to the JVM
-    higher-order-function scorer (same rounding, same tie-break)."""
-    from mapreduce_llm_spark.io import load_table
-    from mapreduce_llm_spark.operators.similarity import cosine_topk, cosine_topk_np
-    from tests.conftest import SF_DIR
-
-    e = load_table(spark, SF_DIR, "embeddings")
-    qvec = list(e.filter(F.col("vec_id") == 0).first()["embedding"])
-    jvm = cosine_topk(e, qvec, k=10).collect()
-    nump = cosine_topk_np(e, qvec, k=10).collect()
-    assert [(r["vec_id"], r["cosine_sim"]) for r in nump] == [
-        (r["vec_id"], r["cosine_sim"]) for r in jvm
-    ]
-
-
 def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
     """With a tiny cap every bucket is dropped → zero candidates; with
     the default cap the injected near-dups are still found (the cap

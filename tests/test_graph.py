@@ -48,7 +48,7 @@ def test_cc_matches_union_find_on_random_graphs(spark, seed):
     edf = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["node"]: r["component"]
-        for r in connected_components(edf, checkpoint_every=5).collect()
+        for r in connected_components(edf).collect()
     }
     # operator omits isolated nodes by contract; compare on edge-touched nodes
     touched = {a for a, _ in edges} | {b for _, b in edges}
@@ -63,6 +63,15 @@ def test_cc_long_chain_converges_fast(spark):
     got = connected_components(edf, max_iter=12).collect()
     assert {r["component"] for r in got} == {0}
     assert len(got) == 64
+
+
+def test_cc_raises_when_max_iter_runs_out(spark):
+    """Two rounds cannot label a 64-node path: the operator must fail
+    loudly rather than return unconverged components."""
+    edges = [(i, i + 1) for i in range(63)]
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(edf, max_iter=2)
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark import registry
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, last_executed_plan
 
 registry.load_all()
 
@@ -93,27 +93,29 @@ def test_theta_join_is_not_cartesian(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def _lazy_plan(spark, df) -> str:
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    return df._jdf.queryExecution().explainString(jmode)
+def _final_plan_tree(description: str) -> str:
+    """The operator tree of a formatted plan description, final AQE
+    plan only (the initial plan repeats every node)."""
+    tree = description.split("\n\n")[0]
+    return tree.split("+- == Initial Plan ==")[0]
 
 
 def test_minhash_pipeline_no_python_udf(spark):
     """The MinHash+LSH dedup is pure JVM built-ins — no Python worker
     in the plan (the scalability claim of operators/dedup.py). The
-    registered query eagerly checkpoints (leak-free contract), so the
-    real plan is inspected via materialize=False on the operator."""
+    operator eagerly checkpoints its pair set, so the plan it ran is
+    read back from the status store."""
     from mapreduce_llm_spark.operators.dedup import minhash_near_dup_pairs
     from mapreduce_llm_spark.queries.llm_pipeline import _neardup_corpus
 
-    df = minhash_near_dup_pairs(
+    minhash_near_dup_pairs(
         _neardup_corpus(spark, SF_DIR), "text", "doc_id",
-        threshold=0.5, num_hashes=32, bands=8, materialize=False,
+        threshold=0.5, num_hashes=32, bands=8,
     )
-    plan = _lazy_plan(spark, df)
-    df.cached_base.unpersist()
+    plan = last_executed_plan(spark)
+    assert "InMemoryRelation" in plan, "not the operator's checkpoint job"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "mapInPandas" not in plan.lower()
+    assert "mapinpandas" not in plan.lower()
 
 
 def test_sim_search_no_shuffle_before_topk(spark):
@@ -126,17 +128,16 @@ def test_ngram_dedup_is_inverted_index_join(spark):
     """The exact-Jaccard verify is an inverted-index equi-join (explode
     shingles on both sides, count per pair), not a blocked cross with
     per-pair set ops — the SCALING.md claim. Generate = explode; the
-    intersection count is a partial+final HashAggregate pair. Inspected
-    via materialize=False (see test_minhash_pipeline_no_python_udf)."""
+    intersection count is a partial+final HashAggregate pair. Read
+    from the executed plan (see test_minhash_pipeline_no_python_udf)."""
     from mapreduce_llm_spark.operators.dedup import ngram_jaccard_pairs
     from mapreduce_llm_spark.queries.llm_pipeline import _neardup_corpus
 
-    df = ngram_jaccard_pairs(
+    ngram_jaccard_pairs(
         _neardup_corpus(spark, SF_DIR), "text", "doc_id",
-        ["lang", "source"], threshold=0.5, materialize=False,
+        ["lang", "source"], threshold=0.5,
     )
-    plan = _lazy_plan(spark, df)
-    df.cached_base.unpersist()
+    plan = _final_plan_tree(last_executed_plan(spark))
     assert plan.count("Generate") >= 2
     assert "HashAggregate" in plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan

@@ -114,8 +114,7 @@ def test_global_row_number_mono_path_matches_naive_and_removes_window(spark):
     over the checkpointed range-sorted blocks — the plan must contain
     NO row_number window (the previous form's full hash-repartition +
     second sort), and the ranks must equal the naive single-partition
-    window bit-for-bit. The materialize=False escape hatch (no frozen
-    blocks, mono ids unsound) must keep the window form."""
+    window bit-for-bit."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -142,13 +141,6 @@ def test_global_row_number_mono_path_matches_naive_and_removes_window(spark):
         ).collect()
     }
     assert {r.event_id: r.rn for r in got.select("event_id", "rn").collect()} == want
-
-    lazy = global_row_number(e, order, alias="rn", materialize=False)
-    lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert "row_number()" in lazy_plan, "escape hatch must keep the window"
-    assert {
-        r.event_id: r.rn for r in lazy.select("event_id", "rn").collect()
-    } == want
 
 
 def test_mono_consecutiveness_guard_fires_on_drift(spark, monkeypatch):

@@ -10,6 +10,12 @@ Variant construction:
                   variant B = the same function with
                   DataFrame.localCheckpoint patched to identity (the
                   exact "without the materialization barrier" form).
+                  The patch also strips the lineage-truncation
+                  checkpoints inside operators/graph.py, so it is not
+                  a valid A/B for a query that calls
+                  connected_components, pagerank or kcore_peel_trace:
+                  variant B there re-plans every earlier iteration
+                  (3^k plans for pagerank, driver OOM for long loops).
   --vs NAME_B     variant B = a second registered query name (for
                   experiments staged as *_ab_variant functions).
 
@@ -25,7 +31,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,31 +43,13 @@ def _noop_local_checkpoint(self, eager=True, storageLevel=None):
 
 
 class patched_no_checkpoint:
-    """Context manager: DataFrame.localCheckpoint becomes identity.
-
-    ``lazy_only=True`` no-ops only ``eager=False`` calls (the
-    sort_barrier sites), leaving eager operator checkpoints intact —
-    the clean A/B for barrier-only deltas in queries that also use
-    eager checkpoints."""
-
-    def __init__(self, lazy_only: bool = False):
-        self._lazy_only = lazy_only
+    """Context manager: DataFrame.localCheckpoint becomes identity."""
 
     def __enter__(self):
         from pyspark.sql import DataFrame
 
-        orig = DataFrame.localCheckpoint
-        self._orig = orig
-        if self._lazy_only:
-
-            def lazy_noop(df, eager=True, storageLevel=None):
-                if eager:
-                    return orig(df, eager=eager, storageLevel=storageLevel)
-                return df
-
-            DataFrame.localCheckpoint = lazy_noop
-        else:
-            DataFrame.localCheckpoint = _noop_local_checkpoint
+        self._orig = DataFrame.localCheckpoint
+        DataFrame.localCheckpoint = _noop_local_checkpoint
         return self
 
     def __exit__(self, *exc):
@@ -80,18 +67,12 @@ def main() -> int:
         action="store_true",
         help="variant B = same query, localCheckpoint patched to identity",
     )
-    ap.add_argument(
-        "--nolazyckpt",
-        action="store_true",
-        help="variant B = same query, only eager=False localCheckpoints "
-        "(sort_barrier sites) patched to identity",
-    )
     ap.add_argument("--vs", default=None, help="variant B = this query name")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--passes", type=int, default=5)
     args = ap.parse_args()
-    if not (args.nockpt or args.nolazyckpt or args.vs):
-        ap.error("need --nockpt, --nolazyckpt or --vs")
+    if not (args.nockpt or args.vs):
+        ap.error("need --nockpt or --vs")
 
     from tools.host_anchor import cpu_anchor
 
@@ -108,8 +89,8 @@ def main() -> int:
         return run_query(qa, spark, args.sf)
 
     def time_b() -> float:
-        if args.nockpt or args.nolazyckpt:
-            with patched_no_checkpoint(lazy_only=args.nolazyckpt):
+        if args.nockpt:
+            with patched_no_checkpoint():
                 return run_query(qb, spark, args.sf)
         return run_query(qb, spark, args.sf)
 
@@ -132,8 +113,7 @@ def main() -> int:
     med_b = statistics.median(b_ts)
     out = {
         "query": args.query,
-        "variant_b": args.vs
-        or f"{args.query} (no {'lazy ' if args.nolazyckpt else ''}localCheckpoint)",
+        "variant_b": args.vs or f"{args.query} (no localCheckpoint)",
         "passes": args.passes,
         "a_median": round(med_a, 3),
         "b_median": round(med_b, 3),
