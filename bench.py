@@ -314,16 +314,24 @@ def host_state() -> dict:
 
 
 def build_records(
-    times: dict, pinned_times: dict, *, sf: float, passes: int, host: dict
+    times: dict,
+    pinned_times: dict,
+    *,
+    sf: float,
+    passes: int,
+    host: dict,
+    master: str,
+    default_parallelism: int,
 ) -> tuple[dict, dict]:
     """Assemble the two emitted bench records from measured inputs —
     the big full-map record (also written to BENCH_FULL_r{N}.json) and
     the compact growth-invariant gate record the driver's tail capture
     keeps. Factored out of main() so the record SHAPE is testable
     without running the suite (advisor, round 13): both records must
-    carry the self-reported host bracket, the gate record must stay
-    pinned-set-based (suite growth cannot move it), and the two must
-    agree on the totals."""
+    carry the self-reported host bracket and the session's master and
+    default parallelism (the cores the run actually used), the gate
+    record must stay pinned-set-based (suite growth cannot move it),
+    and the two must agree on the totals."""
     total = round(sum(times.values()), 3)
     pinned_total = round(sum(pinned_times.values()), 3)
     common = {
@@ -336,6 +344,8 @@ def build_records(
         "pinned_set": "v1",
         "pinned_seconds": pinned_total,
         "host": host,
+        "master": master,
+        "defaultParallelism": default_parallelism,
     }
     full_record = {
         "metric": "headline_suite_seconds_full",
@@ -432,7 +442,13 @@ def main() -> None:
     # versa) localizes WHEN the contention hit within the run
     host = {"start": host_start, "end": host_state()}
     full_record, gate_record = build_records(
-        times, pinned_times, sf=sf, passes=passes, host=host
+        times,
+        pinned_times,
+        sf=sf,
+        passes=passes,
+        host=host,
+        master=spark.sparkContext.master,
+        default_parallelism=spark.sparkContext.defaultParallelism,
     )
     total = full_record["value"]
     # Committed full-map artifact (VERDICT r8 finding #1): the stdout

@@ -3,8 +3,21 @@
 All ten tables (TESTDATA.md / FIXTURES.md) are read with explicit
 pushdown-friendly parquet scans. At 100 TB these would be
 partitioned/bucketed table paths; the loader keeps a single seam so a
-cluster deployment only changes this module (e.g. to catalog tables),
-not the operators.
+cluster deployment only changes this module (e.g. to catalog tables,
+which carry their schema in the metastore), not the operators.
+
+Schema memo: inferring a parquet schema launches a Spark job that reads
+file footers, and a query loads each of its tables on every call. So
+``load_table`` infers a table's schema once per (qualified path, size,
+modification time), read from the Hadoop ``FileSystem`` status (any URI
+Spark can read), and passes it to ``spark.read.schema(...)``, which
+launches no job. A rewritten file changes the key and is inferred
+afresh; for a directory table the key is the directory's own status,
+whose modification time moves when files are added, removed or renamed
+into it. Only the schema is memoized: every call returns a fresh
+relation (two loads of one table self-join with distinct attribute
+ids), and every call re-sets the reader conf and re-runs the timestamp
+normalization and the drift check below.
 """
 
 from __future__ import annotations
@@ -12,6 +25,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -27,6 +41,26 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# qualified path → (size, modification time, inferred schema); one entry
+# per path, replaced when the file changes
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per
+    version of the file (see the module docstring)."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    status = fs.getFileStatus(hpath)
+    key = fs.makeQualified(hpath).toString()
+    version = (status.getLen(), status.getModificationTime())
+    memo = _SCHEMAS.get(key)
+    if memo is None or memo[:2] != version:
+        memo = (*version, spark.read.parquet(path).schema)
+        _SCHEMAS[key] = memo
+    return spark.read.schema(memo[2]).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,7 +89,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         "orders": ("o_orderdate",),
         "lineitem": ("l_shipdate",),
     }.get(name, ())
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in ts_cols:
         t = df.schema[col].dataType
         if isinstance(t, LongType):

@@ -2,15 +2,23 @@
 pipeline (near-dup PAIRS are only half the job: survivors are chosen
 per CLUSTER, and clusters are the transitive closure of the pairs).
 
-Algorithm: alternating min-neighbor propagation and pointer jumping
-(label(x) ← min(label(x), min_{y∈N(x)} label(y), label(label(x)))),
-the standard O(log diameter) dataflow CC. Each iteration is ONE
-hash-shuffle join of a message table against the label map plus one
-keyed aggregate (round-15; previously three joins); the driver loop
-stops at fixpoint and raises if ``max_iter`` rounds end before it.
-Lineage is truncated with ``localCheckpoint`` every
+Two branches, chosen from the input size alone. One bounded action
+collects at most ``CC_LOCAL_EDGES + 1`` edges; when the whole edge list
+fits, the driver labels it with a vectorized union-find (no rounds, no
+further jobs). Above the bound the distributed rounds below run
+unchanged, so the only added cost there is that one probe.
+
+Distributed algorithm: alternating min-neighbor propagation and pointer
+jumping (label(x) ← min(label(x), min_{y∈N(x)} label(y),
+label(label(x)))), the standard O(log diameter) dataflow CC. Each
+iteration is ONE hash-shuffle join of a message table against the label
+map plus one keyed aggregate (round-15; previously three joins); the
+driver loop stops at fixpoint and raises if ``max_iter`` rounds end
+before it. Lineage is truncated with ``localCheckpoint`` every
 ``CC_CHECKPOINT_EVERY`` iterations — the per-iteration plan is
-otherwise identical.
+otherwise identical. Kiveris et al. (SoCC 2014) bound the number of
+such rounds; the local branch is orthogonal and removes them altogether
+for graphs under the bound.
 
 Oracle strategy (q_graph_components): on the consecutive-event graph
 (edges between successive events of a user ≤ 30 min apart) connected
@@ -22,8 +30,11 @@ against a closed-form SQL equivalent.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 # connected_components truncates lineage with localCheckpoint every
@@ -32,6 +43,30 @@ from pyspark.storagelevel import StorageLevel
 # blows up — observed as an OOM after ~10 un-checkpointed rounds even
 # on a 64-node graph.
 CC_CHECKPOINT_EVERY = 5
+# connected_components labels an edge list of at most this many rows on
+# the driver (about 1.6 MB of int64 pairs) instead of running rounds.
+CC_LOCAL_EDGES = 100_000
+
+
+def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized union-find: (nodes, min node id of each one's
+    component). Ids are ranked first, so a root's rank is its id's; roots
+    hook onto the smaller root across every edge at once, then pointer
+    jumping flattens every tree. Each hook round at least halves the
+    roots that still have a neighbouring root."""
+    nodes, ix = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = ix[: len(src)], ix[len(src) :]
+    parent = np.arange(len(nodes))
+    while True:
+        pu, pv = parent[u], parent[v]
+        if np.array_equal(pu, pv):
+            return nodes, nodes[parent]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -40,16 +75,40 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     from the edge list and so from the output — union them in if the
     caller's node set is wider.
 
-    ``max_iter`` bounds the rounds; labels still changing after the
-    last one raise ``RuntimeError`` rather than return unconverged
-    components. Propagation plus pointer jumping converges in
-    O(log diameter) rounds: a 4096-node path needs fewer than 25.
+    One action first collects at most ``CC_LOCAL_EDGES + 1`` edges. If
+    the edge list fits, it is labelled on the driver and the result is
+    the same rows and schema the distributed rounds give. Otherwise the
+    distributed rounds run; ``max_iter`` bounds only those: labels still
+    changing after the last one raise ``RuntimeError`` rather than
+    return unconverged components. Propagation plus pointer jumping
+    converges in O(log diameter) rounds: a 4096-node path needs fewer
+    than 25.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
+    # an Arrow collect is one job over the edge plan's last stage, each
+    # partition shipping at most bound + 1 rows to one collecting task;
+    # collect() would scan partitions in growing rounds, a job each
+    probe = edges.select("src", "dst").limit(CC_LOCAL_EDGES + 1).toArrow()
+    if probe.num_rows <= CC_LOCAL_EDGES:
+        nodes, labels = _min_labels(
+            probe.column("src").to_numpy(), probe.column("dst").to_numpy()
+        )
+        # the distributed branch's schema: node typed like the symmetrized
+        # edge ids, component from a min aggregate (always nullable)
+        node = sym.schema["src"]
+        schema = StructType(
+            [
+                StructField("node", node.dataType, node.nullable),
+                StructField("component", node.dataType, True),
+            ]
+        )
+        return edges.sparkSession.createDataFrame(
+            pa.table({"node": nodes, "component": labels}), schema
+        )
     labels = (
         sym.groupBy("src")
         .agg(F.min("dst").alias("_nmin"))

@@ -35,8 +35,6 @@ from mapreduce_llm_spark.operators.textstats import (
     fingerprint_col,
     punct_ratio_col,
     quality_score_col,
-    stopword_ratio_col,
-    text_stats,
     token_count_col,
     word_count_col,
 )

@@ -194,9 +194,16 @@ def test_bench_records_self_report_host_state():
     pinned = {"q_a": 1.5, "q_b": 0.5}
     host = {"start": state, "end": bench.host_state()}
     full, gate = bench.build_records(
-        times, pinned, sf=0.1, passes=2, host=host
+        times,
+        pinned,
+        sf=0.1,
+        passes=2,
+        host=host,
+        master="local[4]",
+        default_parallelism=4,
     )
     for rec in (full, gate):
+        assert rec["master"] == "local[4]" and rec["defaultParallelism"] == 4
         assert rec["host"] is host
         assert set(rec["host"]) == {"start", "end"}
         assert set(rec["host"]["start"]) == {"cpu_anchor_md5_2m_s", "loadavg"}
@@ -208,3 +215,32 @@ def test_bench_records_self_report_host_state():
     assert full["pinned_seconds"] == gate["pinned_seconds"] == 2.0
     assert gate["queries"] == pinned
     assert full["queries"] == times and full["pinned_queries"] == pinned
+
+
+def test_load_bench_parses_records_with_and_without_parallelism(tmp_path):
+    """The master/defaultParallelism keys are additions only: a record
+    from before them and one with them both load and gate."""
+    import bench
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    old = load_bench(os.path.join(root, "BENCH_r15.json"))
+    assert "defaultParallelism" not in old and old["queries"]
+    full, gate_rec = bench.build_records(
+        dict(old["queries"]),
+        dict(old["queries"]),
+        sf=0.1,
+        passes=3,
+        host={},
+        master="local[4]",
+        default_parallelism=4,
+    )
+    p = tmp_path / "bench_stdout.txt"
+    # bench.py's stdout: the full line, blank padding, the compact gate line
+    p.write_text(
+        json.dumps(full) + "\n" * 4096 + json.dumps(gate_rec, separators=(",", ":")) + "\n"
+    )
+    new = load_bench(str(p))
+    assert new["defaultParallelism"] == 4 and new["master"] == "local[4]"
+    assert new["queries"] == old["queries"]
+    ok, msg = gate(old, new, max_ratio=1.15)
+    assert ok, msg

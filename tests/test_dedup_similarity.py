@@ -351,8 +351,9 @@ def test_blocked_all_pairs_is_lazy_no_driver_jobs(spark):
     before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
     df = registry.QUERIES["q_dedup_embed"](spark, SF_DIR)
     after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    # one metadata job is the parquet file listing from load_table; a
-    # driver-side collect would add at least two more (count + collect)
+    # at most one metadata job: load_table's footer read, the first time
+    # the session sees the table; a driver-side collect would add at
+    # least two more (count + collect)
     assert len(after) - len(before) <= 1, "plan construction triggered Spark jobs"
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # the block-pair scorer

@@ -1,7 +1,9 @@
 """Connected-components correctness on arbitrary random graphs —
 the oracle query (q_graph_components) proves the session graph; this
 proves general topologies (chains, stars, cycles, forests) against an
-in-test union-find."""
+in-test union-find, on both branches of the operator: the driver-side
+labelling of an edge list within ``CC_LOCAL_EDGES`` and the distributed
+rounds above it."""
 
 from __future__ import annotations
 
@@ -10,8 +12,18 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_llm_spark.operators import graph
 from mapreduce_llm_spark.operators.graph import connected_components
 from tests.conftest import SMOKE_SF_DIR
+
+
+def _on_both_branches(monkeypatch):
+    """Loop body runs twice: under the module's bound (the graphs here
+    take the driver-side branch), then under a bound of 0, which sends
+    any non-empty edge list to the distributed rounds."""
+    for bound in (graph.CC_LOCAL_EDGES, 0):
+        monkeypatch.setattr(graph, "CC_LOCAL_EDGES", bound)
+        yield bound
 
 
 def _union_find(nodes, edges):
@@ -36,7 +48,7 @@ def _union_find(nodes, edges):
 
 
 @pytest.mark.parametrize("seed", [1, 7, 42])
-def test_cc_matches_union_find_on_random_graphs(spark, seed):
+def test_cc_matches_union_find_on_random_graphs(spark, seed, monkeypatch):
     rng = random.Random(seed)
     n_nodes, n_edges = 120, 90  # sparse → many nontrivial components
     edges = [
@@ -46,32 +58,85 @@ def test_cc_matches_union_find_on_random_graphs(spark, seed):
     expected = _union_find(range(n_nodes), edges)
 
     edf = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(edf).collect()
-    }
     # operator omits isolated nodes by contract; compare on edge-touched nodes
     touched = {a for a, _ in edges} | {b for _, b in edges}
-    assert got == {n: expected[n] for n in touched}
+    for bound in _on_both_branches(monkeypatch):
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(edf).collect()
+        }
+        assert got == {n: expected[n] for n in touched}, f"bound={bound}"
 
 
-def test_cc_long_chain_converges_fast(spark):
+def test_cc_long_chain_converges_fast(spark, monkeypatch):
     """A 64-node path needs ~log2(64) pointer-jump rounds, far under
     max_iter — the O(log diameter) claim, observed."""
     edges = [(i, i + 1) for i in range(63)]
     edf = spark.createDataFrame(edges, "src long, dst long")
-    got = connected_components(edf, max_iter=12).collect()
-    assert {r["component"] for r in got} == {0}
-    assert len(got) == 64
+    for bound in _on_both_branches(monkeypatch):
+        got = connected_components(edf, max_iter=12).collect()
+        assert {r["component"] for r in got} == {0}, f"bound={bound}"
+        assert len(got) == 64
 
 
-def test_cc_raises_when_max_iter_runs_out(spark):
+def test_cc_raises_when_max_iter_runs_out(spark, monkeypatch):
     """Two rounds cannot label a 64-node path: the operator must fail
-    loudly rather than return unconverged components."""
+    loudly rather than return unconverged components. Only the
+    distributed branch has rounds, so the bound forces it."""
+    monkeypatch.setattr(graph, "CC_LOCAL_EDGES", 0)
     edges = [(i, i + 1) for i in range(63)]
     edf = spark.createDataFrame(edges, "src long, dst long")
     with pytest.raises(RuntimeError, match="max_iter=2"):
         connected_components(edf, max_iter=2)
+
+
+def _cc_run(spark, edf, bound, monkeypatch):
+    """(sorted rows, schema, Spark jobs launched) of one
+    connected_components call under edge bound ``bound``."""
+    monkeypatch.setattr(graph, "CC_LOCAL_EDGES", bound)
+    sc = spark.sparkContext
+    group = f"test-cc-{bound}-{random.random()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(edf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(tuple(r) for r in out.collect()), out.schema, jobs
+
+
+def test_cc_local_bound_and_branches_agree(spark, monkeypatch):
+    """Exactly ``CC_LOCAL_EDGES`` edges are labelled on the driver after
+    one probe job; one edge more runs the distributed rounds. Both give
+    the same rows and schema on self-loops, duplicate and reversed
+    edges, non-nullable ids and an empty edge list."""
+    edges = [(1, 1), (1, 2), (2, 1), (1, 2), (3, 4), (4, 4), (9, 5), (5, 7), (8, 8)]
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    n = len(edges)
+    local = _cc_run(spark, edf, n, monkeypatch)
+    rounds = _cc_run(spark, edf, n - 1, monkeypatch)
+    assert local[2] == 1, f"local branch launched {local[2]} jobs"
+    assert rounds[2] > 1
+    assert local[0] == rounds[0] == [
+        (1, 1), (2, 1), (3, 3), (4, 3), (5, 5), (7, 5), (8, 8), (9, 5)
+    ]
+    assert local[1] == rounds[1]
+
+    # spark.range ids are non-nullable, unlike createDataFrame's
+    chain = spark.range(6).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    local = _cc_run(spark, chain, 6, monkeypatch)
+    rounds = _cc_run(spark, chain, 5, monkeypatch)
+    assert local[0] == rounds[0] == [(i, 0) for i in range(7)]
+    assert local[1] == rounds[1]
+
+    # an empty probe fits any bound >= 0; -1 forces the rounds
+    empty = spark.createDataFrame([], "src long, dst long")
+    local = _cc_run(spark, empty, 0, monkeypatch)
+    rounds = _cc_run(spark, empty, -1, monkeypatch)
+    assert local[0] == rounds[0] == []
+    assert local[1] == rounds[1]
 
 
 def test_pagerank_matches_numpy_power_iteration(spark):

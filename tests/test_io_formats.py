@@ -114,3 +114,57 @@ def test_load_rejects_unknown_nanos_column_loudly(spark, tmp_path):
     pq.write_table(table, os.path.join(tmp_path, "events.parquet"))
     with pytest.raises(TypeError, match="ingested_at"):
         load_table(spark, str(tmp_path), "events").schema
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = f"test-io-{id(fn)}-{dt.datetime.now().timestamp()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_reuses_the_schema_and_launches_no_job(spark, tmp_path):
+    _write_events(os.path.join(tmp_path, "events.parquet"), pa.timestamp("ns"))
+    load_table(spark, str(tmp_path), "events")
+    assert _jobs_during(spark, lambda: load_table(spark, str(tmp_path), "events").schema) == 0
+
+
+def test_two_loads_of_one_table_self_join(spark):
+    """Only the schema is memoized: each load is a fresh relation, so a
+    self-join resolves its two sides apart. One shared DataFrame would
+    compare each row's own columns instead."""
+    from tests.conftest import SMOKE_SF_DIR
+
+    t = pq.read_table(os.path.join(SMOKE_SF_DIR, "nation.parquet")).to_pylist()
+    want = sum(1 for a in t for b in t if a["n_nationkey"] == b["n_regionkey"])
+    a = load_table(spark, SMOKE_SF_DIR, "nation")
+    b = load_table(spark, SMOKE_SF_DIR, "nation")
+    assert a.join(b, a.n_nationkey == b.n_regionkey).count() == want > 0
+
+
+def test_rewritten_table_is_read_with_its_new_schema(spark, tmp_path):
+    """A file rewritten at the same path is a new memo key: its new
+    columns and encoding are read, and drift still raises."""
+    path = os.path.join(tmp_path, "events.parquet")
+    _write_events(path, pa.timestamp("ns"))  # ts arrives as a ns long
+    got = load_table(spark, str(tmp_path), "events").orderBy("event_id")
+    assert [r["ts"] for r in got.collect()] == TS
+
+    _write_events(path, pa.timestamp("us"))
+    pq.write_table(
+        pq.read_table(path).append_column("note", pa.array(["x", "y"])), path
+    )
+    got = load_table(spark, str(tmp_path), "events").orderBy("event_id")
+    assert got.columns[-1] == "note"
+    assert [(r["ts"], r["note"]) for r in got.collect()] == list(zip(TS, "xy"))
+
+    table = pq.read_table(path)
+    ns = table.column("ts").cast(pa.timestamp("ns"))
+    pq.write_table(table.append_column("ingested_at", ns), path)
+    with pytest.raises(TypeError, match="ingested_at"):
+        load_table(spark, str(tmp_path), "events")
