@@ -24,7 +24,6 @@ path ships Arrow batches, never single rows.
 
 from __future__ import annotations
 
-import math
 import re
 
 import pandas as pd
@@ -190,10 +189,11 @@ def count_tokens_str(text: str) -> int:
         return _BPE.count(text)
     if not text:
         return 0
-    n = 0
-    for w in _WORD_RE.findall(text):
-        n += max(1, math.ceil(len(w) / _CHARS_PER_TOKEN))
-    return n
+    # ceil division; a word is never empty, so each counts >= 1 token
+    return sum(
+        (len(w) + _CHARS_PER_TOKEN - 1) // _CHARS_PER_TOKEN
+        for w in _WORD_RE.findall(text)
+    )
 
 
 def count_tokens_series(texts: pd.Series) -> pd.Series:

@@ -45,12 +45,14 @@ def cache_key_col(chunk_text_col: str, prompt: str, model: str):
 
 def read_cache(spark: SparkSession, cache_dir: str) -> DataFrame:
     """Load the cache table, one row per ``cache_key`` (the least
-    result, so a re-read picks the same one); empty when absent."""
+    result, so a re-read picks the same one); empty when absent. The
+    schema is known, so no job reads the part files' footers."""
     if os.path.isdir(cache_dir) and any(
         f.endswith(".parquet") for f in os.listdir(cache_dir)
     ):
         return (
-            spark.read.parquet(cache_dir)
+            spark.read.schema(CACHE_SCHEMA)
+            .parquet(cache_dir)
             .groupBy("cache_key")
             .agg(F.min("result").alias("result"))
         )

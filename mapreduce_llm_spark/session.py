@@ -6,6 +6,18 @@ re-planning (partition coalescing, skew-join splitting), Arrow speeds
 the pandas-UDF path, and the session timezone is pinned to UTC so
 timestamp semantics match the DuckDB oracle and are deterministic
 across cluster timezones.
+
+Python tasks (the chunker, ``llm_map``, every pandas UDF) run in worker
+processes that Spark forks from a daemon. The session names the
+package's own daemon, :mod:`mapreduce_llm_spark.worker_daemon`: stock
+``pyspark.daemon`` plus a stat guard on ``zipimporter`` cache
+invalidation, which on Python < 3.12 re-read ``pyspark.zip`` and the
+Spark core jar on every task (0.15-0.23 s of fixed cost per task on a
+4-core host). The executors must import that module, so the package's
+parent directory goes first on their ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``, merged with the driver's own
+``PYTHONPATH``); without it a driver started outside the repository
+with no ``PYTHONPATH`` would fail every Python task.
 """
 
 from __future__ import annotations
@@ -13,6 +25,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _worker_pythonpath() -> str:
+    """The package's parent directory, then the driver's ``PYTHONPATH``
+    entries, each once."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = [root, *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return os.pathsep.join(dict.fromkeys(e for e in entries if e))
 
 
 def get_spark(
@@ -48,6 +68,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mapreduce_llm_spark/warehouse"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "mapreduce_llm_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     # ad-hoc conf overrides for A/B experiments and cluster tuning,

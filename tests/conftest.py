@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -32,3 +33,16 @@ def last_executed_plan(spark) -> str:
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
     # the store's view iterates in executionId order
     return executions.last().physicalPlanDescription()
+
+
+def jobs_during(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs (its own job group, read
+    back from the status tracker)."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -18,6 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from mapreduce_llm_spark.io import load_table
+from tests.conftest import jobs_during
 
 TS = [
     dt.datetime(2024, 1, 1, 0, 0, 0, 123456),
@@ -116,22 +117,10 @@ def test_load_rejects_unknown_nanos_column_loudly(spark, tmp_path):
         load_table(spark, str(tmp_path), "events").schema
 
 
-def _jobs_during(spark, fn) -> int:
-    """Spark jobs launched while ``fn()`` runs."""
-    sc = spark.sparkContext
-    group = f"test-io-{id(fn)}-{dt.datetime.now().timestamp()}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_second_load_reuses_the_schema_and_launches_no_job(spark, tmp_path):
     _write_events(os.path.join(tmp_path, "events.parquet"), pa.timestamp("ns"))
     load_table(spark, str(tmp_path), "events")
-    assert _jobs_during(spark, lambda: load_table(spark, str(tmp_path), "events").schema) == 0
+    assert jobs_during(spark, lambda: load_table(spark, str(tmp_path), "events").schema) == 0
 
 
 def test_two_loads_of_one_table_self_join(spark):

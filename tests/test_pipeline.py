@@ -38,6 +38,7 @@ from mapreduce_llm_spark.operators.pipeline import (
     semantic_filter,
     write_text_sink,
 )
+from tests.conftest import jobs_during
 
 KITCHEN_REVIEWS = "\n".join(
     [
@@ -107,6 +108,24 @@ def test_cache_is_content_addressed_not_positional(spark, tmp_path):
         spark, KITCHEN_REVIEWS, "keep lamps", FakeChatClient("lamp"), cache_dir=cache_dir
     )
     assert out == "this lamp is too dim"
+
+
+def test_read_cache_supplies_its_schema(spark, tmp_path):
+    """``read_cache`` reads with the cache's known schema, so loading a
+    non-empty cache launches no footer job. An absent cache reads as
+    empty, and the empty part file an all-hit run appends reads too."""
+    import pyarrow.parquet as pq
+
+    cache_dir = str(tmp_path / "cache")
+    assert read_cache(spark, cache_dir).collect() == []
+    process_text(spark, KITCHEN_REVIEWS, "p", FakeChatClient("kitchen"), cache_dir=cache_dir)
+    first = sorted(read_cache(spark, cache_dir).collect())
+    assert first
+    process_text(spark, KITCHEN_REVIEWS, "p", FailingChatClient(), cache_dir=cache_dir)
+    parts = [f for f in os.listdir(cache_dir) if f.endswith(".parquet")]
+    assert any(pq.read_metadata(os.path.join(cache_dir, f)).num_rows == 0 for f in parts)
+    assert jobs_during(spark, lambda: read_cache(spark, cache_dir)) == 0
+    assert sorted(read_cache(spark, cache_dir).collect()) == first
 
 
 def test_error_propagation(spark):

@@ -1,8 +1,18 @@
-"""get_spark's SPARK_GRAFT_CONF override check."""
+"""get_spark's SPARK_GRAFT_CONF override check, and the Python-worker
+daemon it starts the executors' workers from."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
 from mapreduce_llm_spark.session import get_spark
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 STATIC_KEY = "spark.sql.streaming.ui.enabled"
 
@@ -15,3 +25,61 @@ def test_conf_override_already_in_effect_prints_no_warning(spark, monkeypatch, c
     monkeypatch.setenv("SPARK_GRAFT_CONF", f"{STATIC_KEY}=TRUE")
     get_spark(app_name="mapreduce_llm_spark-tests")
     assert "WARNING" not in capsys.readouterr().err
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="Python >= 3.12 defers the re-read itself")
+def test_python_workers_do_not_reread_unchanged_archives(spark):
+    """A worker's per-task cache invalidation keeps the parsed
+    directories of ``pyspark.zip`` and the Spark jar instead of
+    re-reading them."""
+
+    def zip_caches_kept(_):
+        # defined here so it pickles by value: workers cannot import
+        # the test modules
+        import importlib
+        import sys
+        import zipimport
+
+        importers = [
+            v for v in list(sys.path_importer_cache.values())
+            if isinstance(v, zipimport.zipimporter)
+        ]
+        before = [z._files for z in importers]
+        importlib.invalidate_caches()
+        yield len(importers), all(f is z._files for f, z in zip(before, importers))
+
+    [(n_importers, kept)] = spark.sparkContext.parallelize([0], 1).mapPartitions(zip_caches_kept).collect()
+    assert n_importers > 0
+    assert kept
+
+
+def test_driver_outside_the_repo_runs_python_tasks(tmp_path):
+    """A driver started outside the repository with no PYTHONPATH still
+    runs Python tasks: the executors import the daemon module and the
+    package from the PYTHONPATH the session hands them."""
+    script = tmp_path / "driver.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {REPO!r})
+            from pyspark.sql import functions as F
+            from mapreduce_llm_spark.functions.tokens import count_tokens_str
+            from mapreduce_llm_spark.session import get_spark
+
+            spark = get_spark(app_name="outside-driver")
+            tokens = F.udf(count_tokens_str, "long")
+            rows = spark.createDataFrame([("abcde fg",)], "t string").select(tokens("t")).collect()
+            print("RESULT", rows[0][0])
+            spark.stop()
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_GRAFT_CONF")}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "RESULT 3" in out.stdout

@@ -4,6 +4,13 @@ cost-table exactness AND completeness, determinism."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from mapreduce_llm_spark.functions import tokens
 from mapreduce_llm_spark.functions.tokens import (
     DEFAULT_MODEL,
     MODEL_COSTS_PER_1M_INPUT_TOKENS,
@@ -44,3 +51,20 @@ def test_token_count_monotone_in_content():
     assert count_tokens_str("one two three") < count_tokens_str(
         "one two three four five six seven"
     )
+
+
+# Unicode whitespace that str.split() and \S both treat as a word break
+_SPACES = " \t\n\r\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0\u1680\u2000\u2003\u200a\u2028\u2029\u202f\u205f\u3000"
+
+
+@pytest.mark.skipif(
+    tokens._ENC is not None or tokens._BPE is not None,
+    reason="an exact encoder replaces the heuristic",
+)
+@settings(max_examples=300, deadline=None)
+@given(st.text(alphabet=st.one_of(st.characters(), st.sampled_from(_SPACES))))
+def test_heuristic_count_matches_ceil_formula(text):
+    """The integer ceil division gives the same count as the
+    ``max(1, ceil(len / 4))`` per-word rule it replaced."""
+    expected = sum(max(1, math.ceil(len(w) / 4)) for w in tokens._WORD_RE.findall(text))
+    assert count_tokens_str(text) == expected
