@@ -1,8 +1,14 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints to stdout, and writes no file:
+  1. the full record, one JSON line with every headline query's time:
+     {"metric": "headline_suite_seconds_full", "value": N, "queries": {...}, ...}
+  2. 4096 blank lines;
+  3. the compact gate record, one JSON line over PINNED_V1 only:
+     {"metric":"headline_suite_seconds","value":N,"queries":{...},...}
+Redirect stdout to keep a run; tools/bench_compare.load_bench reads
+that file as it stands.
 
 Each query executes its full plan via the noop sink (no driver-side
 collect, so the timing measures the engine, not result transfer).
@@ -19,59 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mapreduce_llm_spark import registry
 from mapreduce_llm_spark.session import get_spark
-
-
-def in_flight_round() -> int:
-    """The round currently being built = 1 + the newest
-    CORRECTNESS_r{N}.json committed at git HEAD. Driver correctness
-    records only enter history in the end-of-round commit, so every
-    bench run inside round N sees max(committed N') = N-1, whether or
-    not uncommitted artifacts sit in the worktree. Falls back to a
-    worktree scan (same rule) when git is unavailable, and to round 1
-    when no record exists at all."""
-    import re
-    import subprocess
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    try:
-        out = subprocess.run(
-            ["git", "ls-tree", "--name-only", "HEAD", "."],
-            cwd=root, capture_output=True, text=True, timeout=30,
-        ).stdout
-        names = out.splitlines()
-    except Exception:
-        names = []
-    if not names:
-        names = os.listdir(root)
-    rounds = [
-        int(m.group(1))
-        for n in names
-        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", n.strip()))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
-def committed_at_head(fname: str) -> bool:
-    """True when ``fname`` (repo-root relative) is committed at git
-    HEAD. Used to refuse overwriting a bench artifact that already
-    entered history for the derived round: both round 10 and round 11
-    had a later bench run (the driver's end-of-round run shares the
-    builder's round derivation while CORRECTNESS_r{N} is still
-    uncommitted) clobber the committed round-end map, leaving the tree
-    dirty with host-noise-only deltas (VERDICT r11 hygiene finding #1,
-    second occurrence of the class). Committed numbers are history;
-    a deliberate refresh sets SPARK_GRAFT_BENCH_OVERWRITE=1."""
-    import subprocess
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    try:
-        res = subprocess.run(
-            ["git", "cat-file", "-e", f"HEAD:{fname}"],
-            cwd=root, capture_output=True, timeout=30,
-        )
-        return res.returncode == 0
-    except Exception:
-        return False
 
 
 # PINNED_V1: the round-1 headline suite, FROZEN. Measured FIRST in the
@@ -114,41 +67,12 @@ PINNED_V1 = [
     "q_text_collocations",
 ]
 
-# Headline suite: one representative per operator family (scan, agg,
-# star join, window, top-k, sessionization, set op, functions, dedup,
-# similarity, text pipeline), plus the scale-path rewrites (salted
-# join, distributed global ranking, merge, retention).
-HEADLINE = [
-    "q_agg_basic",
-    "q_scan_project",
-    "q_filter_pred",
-    "q_join_inner",
-    "q_join_multi",
-    "q_join_salted",
-    "q_tpch_q3_shape",
-    "q_tpch_q5_shape",
-    "q_win_rank",
-    "q_topk",
-    "q_sort_multi",
-    "q_evt_sessionize",
-    "q_evt_retention",
-    "q_union_all",
-    "q_fn_string",
-    "q_fn_array",
-    "q_dedup_exact",
-    "q_sim_search",
-    "q_udtf_flatmap",
-    "q_text_stats",
-    "q_merge_upsert",
-    "q_dedup_fuzzy",
-    "q_dedup_ngram",
-    "q_sim_rerank",
-    "q_text_ngrams",
-    "q_pack_sequences",
-    "q_embed_assign",
-    "q_tpch_q18_shape",
-    "q_dedup_embed",
-    "q_text_collocations",
+# Headline suite: PINNED_V1 (one representative per operator family —
+# scan, agg, star join, window, top-k, sessionization, set op,
+# functions, dedup, similarity, text pipeline — plus the scale-path
+# rewrites: salted join, distributed global ranking, merge, retention),
+# then the representatives added after it, in the order they joined.
+HEADLINE = PINNED_V1 + [
     # round 3: full-TPC-H composition + banded-join + training-window paths
     "q_tpch_q1_shape",
     "q_tpch_q8_shape",
@@ -324,14 +248,13 @@ def build_records(
     default_parallelism: int,
 ) -> tuple[dict, dict]:
     """Assemble the two emitted bench records from measured inputs —
-    the big full-map record (also written to BENCH_FULL_r{N}.json) and
-    the compact growth-invariant gate record the driver's tail capture
-    keeps. Factored out of main() so the record SHAPE is testable
-    without running the suite (advisor, round 13): both records must
-    carry the self-reported host bracket and the session's master and
-    default parallelism (the cores the run actually used), the gate
-    record must stay pinned-set-based (suite growth cannot move it),
-    and the two must agree on the totals."""
+    the big full-map record and the compact growth-invariant gate
+    record that any last-N-chars stdout capture keeps. Factored out of
+    main() so the record SHAPE is testable without running the suite:
+    both records must carry the self-reported host bracket and the
+    session's master and default parallelism (the cores the run
+    actually used), the gate record must stay pinned-set-based (suite
+    growth cannot move it), and the two must agree on the totals."""
     total = round(sum(times.values()), 3)
     pinned_total = round(sum(pinned_times.values()), 3)
     common = {
@@ -450,41 +373,6 @@ def main() -> None:
         master=spark.sparkContext.master,
         default_parallelism=spark.sparkContext.defaultParallelism,
     )
-    total = full_record["value"]
-    # Committed full-map artifact (VERDICT r8 finding #1): the stdout
-    # padding that keeps the driver's last-N-chars capture clean also
-    # pushes the full per-query map out of the captured tail, so the
-    # driver artifact holds only the pinned-30 gate. Writing the
-    # complete map to BENCH_FULL_r{N}.json (committed, N = the
-    # IN-FLIGHT round) keeps round-over-round per-query history
-    # recoverable from the tree alone; tools/bench_compare.load_bench
-    # reads it directly. N is derived from git history: round 10 took
-    # it from a hand-bumped constant and silently overwrote the
-    # committed BENCH_FULL_r09.json with round-10 numbers (VERDICT r10
-    # hygiene finding #2). The in-flight round is 1 + the newest
-    # CORRECTNESS_r{N}.json committed at HEAD — driver correctness
-    # records land in the end-of-round commit, strictly after every
-    # bench run of their round, so the derivation is stable for the
-    # whole round regardless of flip timing or uncommitted files.
-    full_name = f"BENCH_FULL_r{in_flight_round():02d}.json"
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), full_name
-    )
-    if committed_at_head(full_name) and not os.environ.get(
-        "SPARK_GRAFT_BENCH_OVERWRITE"
-    ):
-        # the round's map is already history — a later run in the same
-        # round (the driver's end-of-round bench) must not clobber it;
-        # the full record still goes to stdout below
-        print(
-            f"refusing to overwrite committed {full_name} "
-            "(set SPARK_GRAFT_BENCH_OVERWRITE=1 to force)",
-            file=sys.stderr,
-        )
-    else:
-        with open(full_path, "w") as fh:
-            json.dump(full_record, fh, indent=1, sort_keys=True)
-            fh.write("\n")
     # Full record FIRST: the complete per-query map, for humans and
     # for cross-round full-subset comparison when the whole stdout is
     # kept (tools/bench_compare.load_bench also reconstructs pairs

@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.functions.tokens import (
+    DEFAULT_MODEL,
     MODEL_COSTS_PER_1M_INPUT_TOKENS,
-    count_tokens_str,
+    estimate_cost_usd,
 )
 # split_cached is not called here, but stays importable from this module:
 # tracing wraps the cache layer by these names (perfbench/run.py)
@@ -66,8 +67,7 @@ def estimate_cost(chunks: DataFrame) -> CostEstimate:
         n_tokens=n_tokens,
         n_chunks=int(row["c"]),
         cost_usd_by_model={
-            m: n_tokens * c / 1_000_000.0
-            for m, c in MODEL_COSTS_PER_1M_INPUT_TOKENS.items()
+            m: estimate_cost_usd(n_tokens, m) for m in MODEL_COSTS_PER_1M_INPUT_TOKENS
         },
     )
 
@@ -105,7 +105,7 @@ def map_reduce_llm(
     prompt: str,
     client: ChatClient,
     *,
-    model: str = "gpt-5-nano",
+    model: str = DEFAULT_MODEL,
     max_tokens_per_chunk: int = DEFAULT_MAX_TOKENS_PER_CHUNK,
     cache_dir: str | None = None,
     concurrency: int | None = None,
@@ -156,7 +156,7 @@ def process_text(
     prompt: str,
     client: ChatClient,
     *,
-    model: str = "gpt-5-nano",
+    model: str = DEFAULT_MODEL,
     max_tokens_per_chunk: int = DEFAULT_MAX_TOKENS_PER_CHUNK,
     cache_dir: str | None = None,
     dry_run: bool = False,

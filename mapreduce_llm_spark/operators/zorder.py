@@ -15,10 +15,10 @@ Everything here is JVM-side column arithmetic (shifts, masks, adds —
 whole-stage codegen), no UDFs: the z-value of a row is a pure
 expression and the skipping model (which files a range predicate must
 touch) is an ordinary aggregation over the z-bucketed data. The
-PHYSICAL write path already exists in sinks.write_zordered_parquet
-(same Morton curve via the shared magic-mask spread;
-repartitionByRange + sortWithinPartitions + parquet); this module
-adds the measurable-skipping side: explicit grid scaling with
+PHYSICAL write path is sinks.write_zordered_parquet (this module's
+``scale_to_bits`` + ``z_value`` as the key; repartitionByRange +
+sortWithinPartitions + parquet); this module also holds the
+measurable-skipping side: explicit grid scaling with
 stable-under-append fixed bounds, per-file footprints, and the
 files-touched predicate model. At 100 TB the same expressions drive
 the layout job; the only local-mode simplification is modelling
@@ -49,18 +49,31 @@ def scale_to_bits(col: Column, lo: Column | int, hi: Column | int, bits: int) ->
     return F.greatest(F.lit(0), F.least(top, scaled))
 
 
+def _spread_bits(col: Column) -> Column:
+    """Interleave-ready bit spread (Morton): place each of the low 21
+    bits of ``col`` at even positions of a 64-bit long, via the
+    classic magic-mask shifts — five JVM-codegen bitwise ops, no UDF."""
+    x = col.cast("long")
+    for shift, mask in (
+        (16, 0x0000FFFF0000FFFF),
+        (8, 0x00FF00FF00FF00FF),
+        (4, 0x0F0F0F0F0F0F0F0F),
+        (2, 0x3333333333333333),
+        (1, 0x5555555555555555),
+    ):
+        x = (x.bitwiseOR(F.shiftleft(x, shift))).bitwiseAND(F.lit(mask))
+    return x
+
+
 def z_value(x: Column, y: Column, bits: int = 16) -> Column:
     """Morton interleave of two ``bits``-wide non-negative longs:
-    bit i of x lands at position 2i, bit i of y at 2i+1. Reuses the
-    magic-mask bit spread from the physical write path
-    (sinks._spread_bits — five codegen'd bitwise ops per operand, no
-    UDF, no per-bit terms); 2·bits ≤ 42 stays comfortably inside a
-    signed long. The WRITE-side counterpart is
-    sinks.write_zordered_parquet (same curve, physical files); this
-    expression form feeds the skipping model below and the staged
-    DuckDB oracle twin."""
-    from mapreduce_llm_spark.sinks import _spread_bits
-
+    bit i of x lands at position 2i, bit i of y at 2i+1, via the
+    magic-mask bit spread above (five codegen'd bitwise ops per
+    operand, no UDF, no per-bit terms); 2·bits ≤ 42 stays comfortably
+    inside a signed long. The physical write path,
+    sinks.write_zordered_parquet, sorts by this same expression over
+    ``scale_to_bits(..., bits=20)`` keys; this expression form also
+    feeds the skipping model below and the staged DuckDB oracle twin."""
     if not 1 <= bits <= 21:
         raise ValueError(f"bits must be in [1, 21], got {bits}")
     mask = F.lit((1 << bits) - 1)

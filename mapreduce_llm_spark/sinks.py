@@ -143,42 +143,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def _spread_bits(col):
-    """Interleave-ready bit spread (Morton): place each of the low 21
-    bits of ``col`` at even positions of a 64-bit long, via the
-    classic magic-mask shifts — five JVM-codegen bitwise ops, no UDF."""
-    from pyspark.sql import functions as F
-
-    x = col.cast("long")
-    for shift, mask in (
-        (16, 0x0000FFFF0000FFFF),
-        (8, 0x00FF00FF00FF00FF),
-        (4, 0x0F0F0F0F0F0F0F0F),
-        (2, 0x3333333333333333),
-        (1, 0x5555555555555555),
-    ):
-        x = (x.bitwiseOR(F.shiftleft(x, shift))).bitwiseAND(F.lit(mask))
-    return x
-
-
-def zorder_value(col_a, col_b, bounds_a: tuple, bounds_b: tuple):
-    """Morton z-value of two numeric columns, each min-max scaled to 20
-    bits then bit-interleaved. Rows close in z are close in BOTH
-    dimensions, so sorting by z clusters both columns at once."""
-    from pyspark.sql import functions as F
-
-    def scaled(col, lo, hi):
-        span = float(hi - lo) or 1.0
-        frac = (col.cast("double") - float(lo)) / span
-        return F.least(
-            F.floor(frac * ((1 << 20) - 1)).cast("long"), F.lit((1 << 20) - 1)
-        )
-
-    a = _spread_bits(scaled(col_a, *bounds_a))
-    b = _spread_bits(scaled(col_b, *bounds_b))
-    return a.bitwiseOR(F.shiftleft(b, 1))
-
-
 def write_zordered_parquet(
     df: DataFrame, path: str, col_a: str, col_b: str, n_files: int = 16
 ) -> None:
@@ -197,10 +161,16 @@ def write_zordered_parquet(
     any scale."""
     from pyspark.sql import functions as F
 
+    from mapreduce_llm_spark.operators.zorder import scale_to_bits, z_value
+
     lo_a, hi_a, lo_b, hi_b = df.agg(
         F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
     ).collect()[0]
-    z = zorder_value(F.col(col_a), F.col(col_b), (lo_a, hi_a), (lo_b, hi_b))
+    z = z_value(
+        scale_to_bits(F.col(col_a), F.lit(lo_a), F.lit(hi_a), bits=20),
+        scale_to_bits(F.col(col_b), F.lit(lo_b), F.lit(hi_b), bits=20),
+        bits=20,
+    )
     (
         df.withColumn("_z", z)
         .repartitionByRange(n_files, "_z")

@@ -85,11 +85,14 @@ def test_dry_run_cost_estimate(spark):
     )
 
 
-def test_cache_hit_second_run_zero_calls(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_cache_hit_second_run_zero_calls(spark, tmp_path, as_uri):
     """Second run is served from cache: a client that always fails must
     not be invoked at all (stronger than the reference's call-count
-    assertion, :175-232)."""
-    cache_dir = str(tmp_path / "cache")
+    assertion, :175-232). A ``file://`` URI names the same cache as
+    its plain path, as any Hadoop URI would."""
+    cache = tmp_path / "cache"
+    cache_dir = cache.as_uri() if as_uri else str(cache)
     out1 = process_text(
         spark, KITCHEN_REVIEWS, "keep kitchen", FakeChatClient("kitchen"), cache_dir=cache_dir
     )
@@ -139,12 +142,16 @@ def test_empty_input(spark):
 
 
 def test_clean_cache(spark, tmp_path):
-    cache_dir = str(tmp_path / "cache")
-    process_text(spark, KITCHEN_REVIEWS, "p", FakeChatClient("kitchen"), cache_dir=cache_dir)
-    assert read_cache(spark, cache_dir).count() > 0
-    clean_cache(cache_dir)
-    assert not os.path.isdir(cache_dir)
-    clean_cache(cache_dir)  # no-op when absent (reference :265-281)
+    # a plain path and a file:// URI: any Hadoop URI is dropped alike
+    for cache, cache_dir in (
+        (tmp_path / "cache", str(tmp_path / "cache")),
+        (tmp_path / "uri_cache", (tmp_path / "uri_cache").as_uri()),
+    ):
+        process_text(spark, KITCHEN_REVIEWS, "p", FakeChatClient("kitchen"), cache_dir=cache_dir)
+        assert read_cache(spark, cache_dir).count() > 0
+        clean_cache(cache_dir)
+        assert not cache.exists()
+        clean_cache(cache_dir)  # no-op when absent (reference :265-281)
 
 
 def test_text_sink(spark, tmp_path):

@@ -138,51 +138,7 @@ def gate(old: dict, new: dict, max_ratio: float = 1.15) -> tuple[bool, str]:
     return ratio <= max_ratio, msg
 
 
-def full_map_flags(
-    old: dict, new: dict, flag_ratio: float = 1.3, floor_s: float = 0.2
-) -> list[str]:
-    """Report-only round-over-round full-map diff (VERDICT r9 item 5 /
-    r10 item 6): every common query whose time grew past ``flag_ratio``
-    and isn't sub-``floor_s`` noise. Returns printable lines; does NOT
-    gate — the round-5 lesson stands (±8% host drift; never chase bench
-    deltas without an A/B at adjacent times), so the list is an input
-    to the round notes, not a failure."""
-    qo, qn = old["queries"], new["queries"]
-    lines = []
-    for q in sorted(set(qo) & set(qn)):
-        if qo[q] < floor_s and qn[q] < floor_s:
-            continue
-        ratio = qn[q] / max(qo[q], 1e-9)
-        if ratio > flag_ratio:
-            lines.append(f"{q:32s} {qo[q]:7.3f} -> {qn[q]:7.3f}  ({ratio:.2f}x)")
-    return lines
-
-
-def latest_full_maps(root: str) -> tuple[str, str]:
-    """The two newest committed BENCH_FULL_r{N}.json artifacts."""
-    import os
-
-    found = sorted(
-        f for f in os.listdir(root) if re.fullmatch(r"BENCH_FULL_r\d+\.json", f)
-    )
-    if len(found) < 2:
-        raise SystemExit(f"need two BENCH_FULL artifacts, found {found}")
-    return os.path.join(root, found[-2]), os.path.join(root, found[-1])
-
-
 def main() -> None:
-    if len(sys.argv) == 2 and sys.argv[1] == "--full-latest":
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        p_old, p_new = latest_full_maps(root)
-        old, new = load_bench(p_old), load_bench(p_new)
-        flags = full_map_flags(old, new)
-        print(f"full-map diff {os.path.basename(p_old)} -> "
-              f"{os.path.basename(p_new)}: {len(flags)} flagged (>1.3x)")
-        for line in flags:
-            print("  " + line)
-        return
     if len(sys.argv) != 3:
         raise SystemExit(__doc__)
     old, new = load_bench(sys.argv[1]), load_bench(sys.argv[2])
