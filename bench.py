@@ -289,6 +289,31 @@ def build_records(
     return full_record, gate_record
 
 
+def compare(
+    prev: dict, pinned_times: dict, times: dict, *, max_ratio: float
+) -> tuple[bool, list[str]]:
+    """Gate this run against a previous record: (ok, report lines).
+
+    The pinned_v1 gate is the load-bearing one. It uses the previous
+    record's ``pinned_queries`` when it has them, else its ``queries``
+    (a gate record, whose queries are the pinned set). A full-suite
+    line follows only when the previous record is a full record (it
+    carries ``pinned_queries``); against a gate record it would repeat
+    the pinned pairs. That line cannot fail the run, because suite
+    growth moves it independently of any plan change."""
+    from tools.bench_compare import gate
+
+    prev_pinned = prev.get("pinned_queries") or prev["queries"]
+    ok, msg = gate(
+        {"queries": prev_pinned}, {"queries": pinned_times}, max_ratio=max_ratio
+    )
+    lines = [("PASS " if ok else "FAIL ") + "pinned_v1 " + msg]
+    if "pinned_queries" in prev:
+        ok_full, msg_full = gate(prev, {"queries": times}, max_ratio=max_ratio)
+        lines.append(("PASS " if ok_full else "INFO ") + "full-suite " + msg_full)
+    return ok, lines
+
+
 def run_query(qfn, spark, sf_dir: str) -> float:
     t0 = time.perf_counter()
     df = qfn(spark, sf_dir)
@@ -398,28 +423,13 @@ def main() -> None:
     print(json.dumps(gate_record, separators=(",", ":")))
 
     if compare_path is not None:
-        from tools.bench_compare import gate, load_bench
+        from tools.bench_compare import load_bench
 
-        prev = load_bench(compare_path)
-        # gate on the growth-invariant pinned record when the previous
-        # run carries one; fall back to the previous record's full
-        # query dict (its intersection with PINNED_V1 — still the
-        # fixed set, just measured at the old session position)
-        prev_pinned = prev.get("pinned_queries") or prev.get("queries") or prev
-        ok, msg = gate(
-            {"queries": prev_pinned},
-            {"queries": pinned_times},
-            max_ratio=max_ratio,
+        ok, lines = compare(
+            load_bench(compare_path), pinned_times, times, max_ratio=max_ratio
         )
-        print(("PASS " if ok else "FAIL ") + "pinned_v1 " + msg, file=sys.stderr)
-        ok_full, msg_full = gate(prev, {"queries": times}, max_ratio=max_ratio)
-        print(
-            ("PASS " if ok_full else "INFO ") + "full-suite " + msg_full,
-            file=sys.stderr,
-        )
-        # only the pinned gate is load-bearing: the full-suite number
-        # is reported for continuity but cannot fail the run, because
-        # suite growth inflates it independently of any plan change
+        for line in lines:
+            print(line, file=sys.stderr)
         if not ok:
             sys.exit(1)
 

@@ -13,15 +13,16 @@ What is deliberately NOT vendored is the cl100k_base vocabulary DATA:
 artifact. This container has no network and no tiktoken wheel to lift
 it from, so the vocabulary arrives via a file instead: any
 ``.tiktoken``-format file (``<base64-token> <rank>`` per line) is
-loaded with :func:`load_tiktoken_ranks`; point the
-``SPARK_GRAFT_CL100K_PATH`` environment variable at one (or call
-:func:`install_cl100k_from_file`) and every consumer of the token seam
-— counting, chunk boundaries, cost pre-flight — switches from the
-4-chars-per-token heuristic to exact cl100k with no code change.
+loaded with :func:`load_tiktoken_ranks`. After
+``functions.tokens.install_cl100k_from_file(path)`` on the driver,
+every plan built by a consumer of the token seam — counting, chunk
+boundaries, cost pre-flight — counts with exact cl100k instead of the
+4-chars-per-token heuristic, with no code change.
 
 The encoder object is picklable (plain dicts + pattern string; the
-compiled regex is rebuilt lazily after unpickling), so it survives
-capture in Spark UDF closures.
+compiled regex and the count memo are rebuilt lazily after
+unpickling), so it rides Spark task closures: each task unpickles its
+own copy, and its memo lives as long as that task.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -47,12 +48,19 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
 
 
+def hadoop_path(sc: SparkContext, path: str):
+    """(FileSystem, Path) of ``path`` — a local path or any URI Spark
+    reads and writes (``file://``, ``hdfs://``, an object store), so
+    driver-side checks see the same files Spark's readers and writers
+    do."""
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` with the schema inferred once per
     version of the file (see the module docstring)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_path(spark.sparkContext, path)
     status = fs.getFileStatus(hpath)
     key = fs.makeQualified(hpath).toString()
     version = (status.getLen(), status.getModificationTime())
@@ -168,12 +176,6 @@ def read_text_document(spark: SparkSession, path: str) -> DataFrame:
 
     df = spark.read.text(path, wholetext=True)
     return df.select(F.lit(0).cast("long").alias("doc_id"), F.col("value").alias("text"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views (for the SQL entry points)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def read_csv(

@@ -28,6 +28,8 @@ from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_llm_spark.io import hadoop_path
+
 CACHE_SCHEMA = "cache_key string, result string"
 
 
@@ -43,19 +45,11 @@ def cache_key_col(chunk_text_col: str, prompt: str, model: str):
     )
 
 
-def _hadoop_path(sc: SparkContext, cache_dir: str):
-    """(FileSystem, Path) of ``cache_dir`` — a local path or any URI
-    Spark writes to (``file://``, ``hdfs://``, an object store), so the
-    checks below see the same table ``append_cache`` writes."""
-    path = sc._jvm.org.apache.hadoop.fs.Path(cache_dir)
-    return path.getFileSystem(sc._jsc.hadoopConfiguration()), path
-
-
 def read_cache(spark: SparkSession, cache_dir: str) -> DataFrame:
     """Load the cache table, one row per ``cache_key`` (the least
     result, so a re-read picks the same one); empty when absent. The
     schema is known, so no job reads the part files' footers."""
-    fs, path = _hadoop_path(spark.sparkContext, cache_dir)
+    fs, path = hadoop_path(spark.sparkContext, cache_dir)
     if fs.exists(path):
         return (
             spark.read.schema(CACHE_SCHEMA)
@@ -74,7 +68,7 @@ def append_cache(results: DataFrame, cache_dir: str) -> None:
 def clean_cache(cache_dir: str) -> None:
     """Drop the cache (reference CleanCache,
     internal/cli/mapreduce.go:265-281); no-op when absent."""
-    fs, path = _hadoop_path(SparkContext.getOrCreate(), cache_dir)
+    fs, path = hadoop_path(SparkContext.getOrCreate(), cache_dir)
     fs.delete(path, True)
 
 

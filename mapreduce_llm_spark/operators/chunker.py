@@ -19,32 +19,33 @@ goal (tokenizers differ; SURVEY §7 phase 2); the invariants the
 reference itself tests (mapreduce_test.go:402-436) are: recombination
 preserves the word sequence, and every chunk stays ≤ 2× budget.
 
-Spark shape: the pure function ``chunk_text`` runs per document inside
-``mapInPandas`` — documents are independent, so chunking 100 TB of
+Spark shape: ``chunk_text``'s packing loop runs per document inside
+``mapInPandas``, with the token counter resolved on the driver and
+carried in the task closure — documents are independent, so chunking 100 TB of
 docs is embarrassingly parallel with zero shuffle; only the within-doc
 packing is sequential, exactly like the reference's per-file loop.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from mapreduce_llm_spark.functions.tokens import count_tokens_str
+from mapreduce_llm_spark.functions.tokens import token_counter
 
 DEFAULT_MAX_TOKENS_PER_CHUNK = 2000  # reference internal/cli/mapreduce.go:46
 
 
-def _pack_words(line: str, max_tokens: int) -> list[str]:
+def _pack_words(line: str, max_tokens: int, count: Callable[[str], int]) -> list[str]:
     """Word-level greedy packing for a single overlong line
     (reference internal/cli/mapreduce.go:228-254)."""
     chunks: list[str] = []
     current: list[str] = []
     current_tokens = 0
     for word in line.split(" "):
-        t = count_tokens_str(word + " ")
+        t = count(word + " ")
         if current and current_tokens + t > max_tokens:
             chunks.append(" ".join(current))
             current = []
@@ -58,6 +59,10 @@ def _pack_words(line: str, max_tokens: int) -> list[str]:
 
 def chunk_text(text: str, max_tokens: int = DEFAULT_MAX_TOKENS_PER_CHUNK) -> list[str]:
     """Split one document into token-bounded chunks on line boundaries."""
+    return _chunk(text, max_tokens, token_counter())
+
+
+def _chunk(text: str, max_tokens: int, count: Callable[[str], int]) -> list[str]:
     if not text:
         return []
     chunks: list[str] = []
@@ -73,17 +78,17 @@ def chunk_text(text: str, max_tokens: int = DEFAULT_MAX_TOKENS_PER_CHUNK) -> lis
             current_tokens = 0
 
     for line in text.split("\n"):
-        line_tokens = count_tokens_str(line + "\n")
+        line_tokens = count(line + "\n")
         if line_tokens > max_tokens:
             # overlong single line: flush accumulator, word-pack the
             # line; the last word-chunk stays open as the new
             # accumulator (reference mapreduce.go:249-253)
             flush()
-            wchunks = _pack_words(line, max_tokens)
+            wchunks = _pack_words(line, max_tokens, count)
             chunks.extend(wchunks[:-1])
             if wchunks:
                 current = [wchunks[-1]]
-                current_tokens = count_tokens_str(wchunks[-1] + "\n")
+                current_tokens = count(wchunks[-1] + "\n")
             continue
         if current and current_tokens + line_tokens > max_tokens:
             flush()
@@ -108,9 +113,11 @@ def chunk_documents(
 
     mapInPandas (not applyInPandas): no grouping shuffle is needed
     because each input row is one whole document — every Arrow batch is
-    chunked independently wherever it already lives.
+    chunked independently wherever it already lives. The token counter
+    is resolved here, on the driver, and rides the task closure.
     """
     carry = carry_cols or []
+    count = token_counter()
 
     def chunk_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -120,11 +127,11 @@ def chunk_documents(
             }
             for row in pdf.itertuples(index=False):
                 rowd = dict(zip(pdf.columns, row))
-                for i, chunk in enumerate(chunk_text(rowd[text_col] or "", max_tokens)):
+                for i, chunk in enumerate(_chunk(rowd[text_col] or "", max_tokens, count)):
                     out[id_col].append(rowd[id_col])
                     out["chunk_id"].append(i)
                     out["chunk_text"].append(chunk)
-                    out["n_tokens"].append(count_tokens_str(chunk))
+                    out["n_tokens"].append(count(chunk))
                     for c in carry:
                         out[c].append(rowd[c])
             yield pd.DataFrame(out)

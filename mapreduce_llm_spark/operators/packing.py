@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_llm_spark.functions.tokens import count_tokens_str
+from mapreduce_llm_spark.functions.tokens import token_counter
 
 DEFAULT_SEQ_BUDGET = 2048
 
@@ -44,7 +44,11 @@ def pack_sequences(
     - seq_pos is consecutive from 0 in packing order;
     - deterministic: same doc set → same packing, independent of input
       partitioning (shard = hash(doc_id), packing order = doc_id).
+
+    The token counter is resolved on the driver and rides the task
+    closure.
     """
+    count = token_counter()
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["_shard"].iloc[0])
@@ -57,7 +61,7 @@ def pack_sequences(
         cur_tokens = 0
         cur_len = 0
         for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-            t = count_tokens_str(text or "")
+            t = count(text or "")
             if cur_len and cur_tokens + t > budget:
                 seq += 1
                 cur_tokens = 0

@@ -10,7 +10,7 @@ whole-stage codegen over 100 TB with zero Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
@@ -32,8 +32,9 @@ def words_col(text: Column) -> Column:
 def token_count_col(text: Column) -> Column:
     """The engine's deterministic tokenizer as a JVM expression:
     sum over words of max(1, ceil(len/4)) — the exact logic of
-    functions/tokens.py:count_tokens_str (tiktoken-absent path), kept
-    expression-level so it's both codegen-fast and oracle-expressible.
+    functions/tokens.py:_heuristic_count (the counter when no exact
+    encoder is active), kept expression-level so it's both
+    codegen-fast and oracle-expressible.
     """
     return F.aggregate(
         words_col(text),
@@ -121,20 +122,4 @@ def fingerprint_col(text: Column) -> Column:
         words,
         F.lit(0).cast("long"),
         lambda acc, w: (acc * FP_BASE + word_hash_col(w)) % FP_MOD,
-    )
-
-
-def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document stats frame: counts, ratios, score, lang, print."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        F.length(t).cast("long").alias("n_chars"),
-        word_count_col(t).alias("n_words"),
-        token_count_col(t).alias("n_tokens"),
-        F.round(punct_ratio_col(t), 4).alias("punct_ratio"),
-        F.round(stopword_ratio_col(t), 4).alias("stopword_ratio_en"),
-        quality_score_col(t).alias("quality_score"),
-        detect_lang_col(t).alias("lang_detected"),
-        fingerprint_col(t).alias("fingerprint"),
     )

@@ -19,8 +19,9 @@ PHYSICAL write path is sinks.write_zordered_parquet (this module's
 ``scale_to_bits`` + ``z_value`` as the key; repartitionByRange +
 sortWithinPartitions + parquet); this module also holds the
 measurable-skipping side: explicit grid scaling with
-stable-under-append fixed bounds, per-file footprints, and the
-files-touched predicate model. At 100 TB the same expressions drive
+stable-under-append fixed bounds and per-file footprints (the
+files-touched count over them is an aggregation in
+queries/analytics_r5c.q_zorder_skipping). At 100 TB the same expressions drive
 the layout job; the only local-mode simplification is modelling
 "file" as a fixed-width z-range bucket instead of a physical parquet
 file (deterministic, and exactly the footprint the writer would
@@ -103,24 +104,3 @@ def file_footprints(
             F.count("*").alias("n_rows"),
         )
     )
-
-
-def files_touched(
-    footprints: DataFrame,
-    x_lo: int,
-    x_hi: int,
-    y_lo: int,
-    y_hi: int,
-) -> Column:
-    """Aggregate column: how many files a reader must open for the
-    rectangle predicate ``x ∈ [x_lo, x_hi] AND y ∈ [y_lo, y_hi]``,
-    i.e. whose [min,max] footprint intersects it on BOTH axes. Use in
-    ``footprints.agg(...)``. The complement (skipped files) is the
-    data-skipping win."""
-    hit = (
-        (F.col("x_max") >= x_lo)
-        & (F.col("x_min") <= x_hi)
-        & (F.col("y_max") >= y_lo)
-        & (F.col("y_min") <= y_hi)
-    )
-    return F.sum(hit.cast("long"))

@@ -654,13 +654,10 @@ def q_tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary built in the UDF closure. Rows-only by design: BPE
     merge order is not SQL-expressible.
 
-    Deliberately does NOT go through install_cl100k_from_file: vocab
-    shipping via addFile is app-global and irreversible (ONE install
-    per SparkContext — functions/tokens.py), so a declared query must
-    never mutate the session it runs in; the addFile seam itself is
-    exercised in an isolated app by tests/test_bpe.py. The closure
-    (ranks dict + encoder) pickles to workers per-task instead — the
-    right channel for a per-query vocabulary.
+    The vocabulary rides the UDF closure (the ranks dict pickles to
+    workers with the task), the same channel the engine's token counter
+    uses after install_cl100k_from_file; the query builds its own
+    encoder so it never changes the driver's counter.
 
     Arrow-batched pandas UDF (never per-row Python); at 100 TB this is
     a narrow map whose cost is pure CPU, exactly how the real cl100k

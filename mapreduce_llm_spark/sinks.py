@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_llm_spark.io import hadoop_path
+
 
 def write_partitioned_parquet(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
@@ -100,19 +102,21 @@ def compact_parquet(
     within each output file to restore row-group min/max skipping
     (see write_range_sorted_parquet).
 
-    Writes to a sibling temp dir then atomically swaps, so a reader
-    never sees a half-compacted directory.
+    Writes to a sibling temp dir then swaps by rename, so a reader
+    never sees a half-compacted directory. Sizing, renames and the
+    delete go through the Hadoop ``FileSystem``, so ``path`` may be a
+    local path or any URI Spark writes to.
     """
     import math
-    import os
-    import shutil
 
-    total_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    sc = spark.sparkContext
+    fs, src = hadoop_path(sc, path)
+    files = fs.listFiles(src, True)
+    total_bytes = 0
+    while files.hasNext():
+        status = files.next()
+        if status.getPath().getName().endswith(".parquet"):
+            total_bytes += status.getLen()
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
     writer = df.repartition(n_files)
@@ -121,9 +125,11 @@ def compact_parquet(
     tmp = path.rstrip("/") + "._compacting"
     writer.write.mode("overwrite").parquet(tmp)
     old = path.rstrip("/") + "._pre_compact"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    for a, b in ((path, old), (tmp, path)):
+        if not fs.rename(Path(a), Path(b)):
+            raise OSError(f"could not rename {a} to {b}")
+    fs.delete(Path(old), True)
     return n_files
 
 

@@ -149,6 +149,30 @@ def test_load_bench_reads_the_committed_full_map_artifact():
     assert ok
 
 
+def test_compare_adds_a_full_suite_line_only_against_a_full_record():
+    """``bench.py --compare`` against a gate record (pinned queries
+    only, like BENCH_r15.json) prints the pinned_v1 line alone: a
+    full-suite line would re-report the same pairs. Against a full
+    record (BENCH_FULL_r15.json) both lines print."""
+    import bench
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    gate_rec = load_bench(os.path.join(root, "BENCH_r15.json"))
+    full_rec = load_bench(os.path.join(root, "BENCH_FULL_r15.json"))
+    assert "pinned_queries" not in gate_rec and "pinned_queries" in full_rec
+    pinned = gate_rec["queries"]
+    times = {**full_rec["queries"], **pinned}
+
+    ok, lines = bench.compare(gate_rec, pinned, times, max_ratio=1.15)
+    assert ok and len(lines) == 1
+    assert lines[0].startswith("PASS pinned_v1 ") and "ratio=1.000x" in lines[0]
+
+    _ok, lines = bench.compare(full_rec, pinned, times, max_ratio=1.15)
+    assert [line.split()[1] for line in lines] == ["pinned_v1", "full-suite"]
+    n_common = [int(line.split("gate: ")[1].split()[0]) for line in lines]
+    assert n_common[1] > n_common[0]
+
+
 def test_bench_records_self_report_host_state():
     """VERDICT r12 item 5: the driver's r12 pinned artifact read 1.37×
     with uniform inflation across all 30 queries (a bare parquet scan

@@ -84,28 +84,41 @@ def test_tiktoken_file_format_loader(tmp_path):
     assert load_tiktoken_ranks(str(p)) == TOY
 
 
-def test_vocab_file_installs_into_token_seam(tmp_path):
+def _write_vocab(path, vocab: dict[bytes, int]) -> str:
+    path.write_text(
+        "\n".join(base64.b64encode(t).decode() + " " + str(r) for t, r in vocab.items())
+    )
+    return str(path)
+
+
+# TOY plus the space and newline bytes: covers every byte of the texts
+# below, so the cl100k pre-tokenizer's pieces all encode
+TOY_VOCAB = {**TOY, b" ": 8, b"\n": 9}
+# a second, different vocabulary: " a" merges, so " abc" is 2 tokens
+TOY_VOCAB_2 = {**TOY_VOCAB, b" a": 10}
+
+
+@pytest.fixture
+def tokens_module():
+    """The token seam, with the driver's installed vocab reset after the
+    test whatever it installed."""
     from mapreduce_llm_spark.functions import tokens as T
 
-    p = tmp_path / "toy.tiktoken"
-    vocab = {**TOY, b" ": 8}
-    p.write_text(
-        "\n".join(
-            base64.b64encode(t).decode() + " " + str(r) for t, r in vocab.items()
-        )
-    )
+    yield T
+    T._BPE = None
+
+
+def test_vocab_file_installs_into_token_seam(tmp_path, tokens_module):
+    T = tokens_module
     baseline = T.count_tokens_str("abcd abc")
-    T.install_cl100k_from_file(str(p))
-    try:
-        # cl100k pattern: "abcd" + " abc" → [abcd] + [space-merge-less
-        # pieces]: " abc" has no space-letter merges in the toy vocab,
-        # so it splits to " ", then a,bc → 4 tokens total... compute:
-        # "abcd" → [7]; " abc" piece → bytes " abc": no pair with the
-        # space merges, bc(4) merges → [" ", "a", "bc"] → 3 ids.
-        assert T.count_tokens_str("abcd abc") == 4
-        assert T.count_tokens_str("abcd abc") != baseline or baseline == 4
-    finally:
-        T._BPE = None  # restore heuristic for other tests
+    T.install_cl100k_from_file(_write_vocab(tmp_path / "toy.tiktoken", TOY_VOCAB))
+    # cl100k pattern: "abcd" + " abc" → [abcd] + [space-merge-less
+    # pieces]: " abc" has no space-letter merges in the toy vocab,
+    # so it splits to " ", then a,bc → 4 tokens total... compute:
+    # "abcd" → [7]; " abc" piece → bytes " abc": no pair with the
+    # space merges, bc(4) merges → [" ", "a", "bc"] → 3 ids.
+    assert T.count_tokens_str("abcd abc") == 4
+    assert T.count_tokens_str("abcd abc") != baseline or baseline == 4
 
 
 def test_exact_parity_with_tiktoken_when_available():
@@ -177,70 +190,84 @@ def test_bpe_every_emitted_id_is_a_vocab_token_covering_input(text):
     assert b"".join(inv[i] for i in ids) == text.encode("utf-8")
 
 
-def test_installed_vocab_reaches_executors(tmp_path):
-    """The round-4 advice bug: install_cl100k_from_file used to set a
-    driver-global only, so executor-side pandas UDFs silently kept the
-    heuristic. The install now ships the vocab via SparkContext.addFile
-    and workers lazily pick it up from SparkFiles. Shipping is
-    app-global and irreversible (SparkFiles has no remove), so this
-    runs in an ISOLATED Spark application via subprocess — polluting
-    the shared session fixture would flip every later heuristic-based
-    token count."""
-    import base64
-    import subprocess
-    import sys
+def _udf_counts(spark, T, text: str):
+    """The plan's token counts, computed by its tasks on executors."""
+    from pyspark.sql import functions as F
 
-    vocab = {**TOY, b" ": 8}
-    p = tmp_path / "toy.tiktoken"
-    p.write_text(
-        "\n".join(
-            base64.b64encode(t).decode() + " " + str(r) for t, r in vocab.items()
-        )
+    df = spark.createDataFrame([(text,)] * 16, "text string").repartition(4)
+    return df.select(T.make_count_tokens_udf()(F.col("text")).alias("n"))
+
+
+def test_installed_vocab_reaches_executors(spark, tmp_path, tokens_module):
+    """After an install on the driver, the counting UDF counts with the
+    vocab on executors (4 is the toy-BPE count; the heuristic gives 2)."""
+    T = tokens_module
+    T.install_cl100k_from_file(_write_vocab(tmp_path / "toy.tiktoken", TOY_VOCAB))
+    assert {r.n for r in _udf_counts(spark, T, "abcd abc").collect()} == {4}
+
+
+def test_installed_vocab_drives_chunking_and_packing(spark, tmp_path, tokens_module):
+    """chunk_documents and pack_sequences run on executors with the
+    vocab installed on the driver: their rows equal the driver-side
+    chunking and greedy packing under that vocab."""
+    from mapreduce_llm_spark.operators.chunker import chunk_documents, chunk_text
+    from mapreduce_llm_spark.operators.packing import pack_sequences
+
+    T = tokens_module
+    texts = {1: "\n".join(["abcd abc"] * 12), 2: "abc dcba " * 9, 3: "abcd"}
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    heuristic_chunks = [chunk_text(t, 10) for t in texts.values()]
+    T.install_cl100k_from_file(_write_vocab(tmp_path / "toy.tiktoken", TOY_VOCAB))
+    count = T.count_tokens_str
+
+    expected_chunks = sorted(
+        (doc_id, i, c, count(c))
+        for doc_id, text in texts.items()
+        for i, c in enumerate(chunk_text(text, 10))
     )
-    # a second, different vocab for the re-install guard leg
-    p2 = tmp_path / "toy2.tiktoken"
-    p2.write_text(
-        "\n".join(
-            base64.b64encode(t).decode() + " " + str(r)
-            for t, r in {**TOY, b"  ": 8}.items()
-        )
+    # the vocab moves the chunk boundaries, so the comparison shows it
+    assert [chunk_text(t, 10) for t in texts.values()] != heuristic_chunks
+    got_chunks = sorted(tuple(r) for r in chunk_documents(docs, max_tokens=10).collect())
+    assert got_chunks == expected_chunks
+
+    # one shard: greedy first-fit over doc_id order, computed here
+    expected_packing, seq, used, pos = [], 0, 0, 0
+    for doc_id, text in sorted(texts.items()):
+        t = count(text)
+        if pos and used + t > 30:
+            seq, used, pos = seq + 1, 0, 0
+        expected_packing.append((doc_id, seq, pos, t))
+        used, pos = used + t, pos + 1
+    got_packing = sorted(
+        tuple(r) for r in pack_sequences(docs, budget=30, n_shards=1).collect()
     )
-    script = f"""
-from pyspark.sql import SparkSession, functions as F
-from mapreduce_llm_spark.functions import tokens as T
-spark = (SparkSession.builder.master("local[4]")
-         .appName("vocab-ship-test")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
-T.install_cl100k_from_file({str(p)!r}, spark=spark)
-df = spark.createDataFrame([("abcd abc",)] * 64, "text string").repartition(8)
-counts = {{r[0] for r in df.select(T.make_count_tokens_udf()(F.col("text"))).collect()}}
-# 4 = exact toy-BPE count; the heuristic would give 2
-assert counts == {{4}}, counts
-print("EXECUTOR_VOCAB_OK")
-# re-install with IDENTICAL contents: a no-op, never a second addFile
-# (addFile on the fixed basename with changed bytes fails app-wide)
-T.install_cl100k_from_file({str(p)!r}, spark=spark)
-# re-install with DIFFERENT contents: refused loudly, state untouched
-try:
-    T.install_cl100k_from_file({str(p2)!r}, spark=spark)
-    raise SystemExit("second vocab install should have raised")
-except RuntimeError as e:
-    assert "one install per SparkContext" in str(e), e
-counts = {{r[0] for r in df.select(T.make_count_tokens_udf()(F.col("text"))).collect()}}
-assert counts == {{4}}, counts
-print("REINSTALL_GUARD_OK")
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=240,
-        cwd="/root/repo",
-    )
-    assert "EXECUTOR_VOCAB_OK" in r.stdout, r.stdout + r.stderr
-    assert "REINSTALL_GUARD_OK" in r.stdout, r.stdout + r.stderr
+    assert got_packing == expected_packing
+
+
+def test_a_plan_keeps_the_counter_it_was_built_with(spark, tmp_path, tokens_module):
+    """A second, different install takes effect for plans built after
+    it; a plan built before it still counts with the first vocab."""
+    T = tokens_module
+    T.install_cl100k_from_file(_write_vocab(tmp_path / "toy.tiktoken", TOY_VOCAB))
+    first = _udf_counts(spark, T, "abcd abc")
+    T.install_cl100k_from_file(_write_vocab(tmp_path / "toy2.tiktoken", TOY_VOCAB_2))
+    second = _udf_counts(spark, T, "abcd abc")
+    assert T.count_tokens_str("abcd abc") == 3
+    assert {r.n for r in second.collect()} == {3}
+    assert {r.n for r in first.collect()} == {4}
+
+
+def test_resetting_the_vocab_restores_the_heuristic(spark, tmp_path, tokens_module):
+    """Dropping the driver's encoder returns the heuristic on the driver
+    and, for plans built after, on the executors."""
+    T = tokens_module
+    text = "abcd abc abcd abc abcd abc"
+    heuristic = T.count_tokens_str(text)
+    T.install_cl100k_from_file(_write_vocab(tmp_path / "toy.tiktoken", TOY_VOCAB))
+    assert T.count_tokens_str(text) != heuristic
+    T._BPE = None
+    assert T.count_tokens_str(text) == heuristic == 6
+    assert {r.n for r in _udf_counts(spark, T, text).collect()} == {6}
 
 
 def test_count_memo_matches_encode_len():

@@ -99,8 +99,7 @@ REFERENCE_FIXTURE = "/root/reference/examples/product-ratings/reviews.txt"
 def _spec_chunks(text: str, max_tokens: int, count) -> list[str]:
     """Independent implementation of the documented packing contract
     (line-greedy, overlong-line word fallback, last word-chunk stays
-    open) used as the parity oracle — parameterized by the counter so
-    it exercises the plug-in seam too."""
+    open) used as the parity oracle — parameterized by the counter."""
     chunks: list[str] = []
     cur = ""
     cur_tok = 0
@@ -143,30 +142,14 @@ def test_chunk_text_matches_reference_spec_on_fixture(budget):
 
 
 def test_chunk_parity_with_real_cl100k_encoder():
-    """With a real cl100k encoder installed via the plug-in seam the
-    boundaries must still match the spec oracle (auto-skips where
-    tiktoken is absent — this container)."""
+    """Where tiktoken imports, it is the active counter, and the
+    boundaries must still match the spec oracle counting with cl100k
+    (auto-skips where tiktoken is absent)."""
     tiktoken = pytest.importorskip("tiktoken")
-    from mapreduce_llm_spark.functions import tokens as T
-
+    if not os.path.exists(REFERENCE_FIXTURE):
+        pytest.skip("reference fixture not available")
     enc = tiktoken.get_encoding("cl100k_base")
-    T.set_token_counter(lambda s: len(enc.encode(s)))
-    try:
-        text = open(REFERENCE_FIXTURE).read()
-        assert chunk_text(text, 100) == _spec_chunks(
-            text, 100, T.count_tokens_str
-        )
-    finally:
-        T.set_token_counter(None)
-
-
-def test_token_counter_seam_overrides_and_restores():
-    from mapreduce_llm_spark.functions import tokens as T
-
-    base = T.count_tokens_str("hello world foo")
-    T.set_token_counter(lambda s: 42)
-    try:
-        assert T.count_tokens_str("anything") == 42
-    finally:
-        T.set_token_counter(None)
-    assert T.count_tokens_str("hello world foo") == base
+    text = open(REFERENCE_FIXTURE).read()
+    assert chunk_text(text, 100) == _spec_chunks(
+        text, 100, lambda s: len(enc.encode(s))
+    )

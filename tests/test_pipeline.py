@@ -36,6 +36,7 @@ from mapreduce_llm_spark.operators.pipeline import (
     semantic_classify,
     semantic_extract,
     semantic_filter,
+    semantic_transform,
     write_text_sink,
 )
 from tests.conftest import jobs_during
@@ -319,6 +320,25 @@ def test_semantic_classify_and_extract(spark):
 
     extracted = semantic_extract(docs, "extract", FakeChatClient("kitchen")).collect()
     assert [(r["doc_id"], r["extracted"]) for r in extracted] == [(1, "good kitchen pan")]
+
+
+def test_semantic_transform_newline_joins_chunk_rewrites(spark):
+    """1:1 rewrite: one row per document, its chunks' answers joined by
+    newlines in chunk order (empty answers keep their place)."""
+    from mapreduce_llm_spark.operators.chunker import chunk_text
+
+    client = FakeChatClient("kitchen")
+    texts = {1: KITCHEN_REVIEWS, 2: "decent phone case", 3: "kitchen sink"}
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    out = semantic_transform(docs, "rewrite", client, max_tokens_per_chunk=6)
+    assert out.columns == ["doc_id", "rewritten"]
+    got = {r["doc_id"]: r["rewritten"] for r in out.collect()}
+    assert len(chunk_text(KITCHEN_REVIEWS, 6)) > 1
+    assert got == {
+        doc_id: "\n".join(client.generate("rewrite", c) for c in chunk_text(text, 6))
+        for doc_id, text in texts.items()
+    }
+    assert got[2] == "" and got[3] == "kitchen sink"
 
 
 def test_map_reduce_llm_multi_doc_parallel(spark):

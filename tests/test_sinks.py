@@ -148,6 +148,31 @@ def test_compact_parquet_sort_within_restores_skipping_layout(spark, tmp_path):
         assert vals == sorted(vals), f"{f} not sorted within file"
 
 
+def test_compact_parquet_accepts_a_file_uri(spark, tmp_path):
+    """A ``file://`` path is sized, swapped and cleaned up through the
+    Hadoop FileSystem: only the *.parquet bytes count towards the file
+    count, and no temp dir is left behind."""
+    import math
+    import os
+
+    from mapreduce_llm_spark.sinks import compact_parquet
+
+    local = tmp_path / "frag"
+    # random doubles do not compress: ~2.4 MB of parquet over 16 files
+    spark.range(300_000).select(F.rand(7).alias("x")).repartition(16).write.parquet(
+        str(local)
+    )
+    parquet_bytes = sum(
+        os.path.getsize(local / f) for f in os.listdir(local) if f.endswith(".parquet")
+    )
+
+    n_files = compact_parquet(spark, local.as_uri(), target_file_mb=1)
+    assert n_files == math.ceil(parquet_bytes / 2**20) > 1
+    assert len([f for f in os.listdir(local) if f.endswith(".parquet")]) == n_files
+    assert spark.read.parquet(str(local)).count() == 300_000
+    assert os.listdir(tmp_path) == ["frag"]
+
+
 def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     """ORC write → read must roundtrip values, prune columns, and push
     filters to the scan (same scan-efficiency contract as parquet)."""
