@@ -2,8 +2,11 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints to stdout, and writes no file:
-  1. the full record, one JSON line with every headline query's time:
-     {"metric": "headline_suite_seconds_full", "value": N, "queries": {...}, ...}
+  1. the full record, one JSON line with every headline query's time
+     and the generated classes Spark compiled in each measured pass and
+     per query in the last one:
+     {"metric": "headline_suite_seconds_full", "value": N, "queries": {...},
+      "codegen_compiles_per_pass": [...], "codegen_compiles_per_query": {...}, ...}
   2. 4096 blank lines;
   3. the compact gate record, one JSON line over PINNED_V1 only:
      {"metric":"headline_suite_seconds","value":N,"queries":{...},...}
@@ -24,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mapreduce_llm_spark import registry
-from mapreduce_llm_spark.session import get_spark
+from mapreduce_llm_spark.session import codegen_compiles, get_spark
 
 
 # PINNED_V1: the round-1 headline suite, FROZEN. Measured FIRST in the
@@ -246,6 +249,9 @@ def build_records(
     host: dict,
     master: str,
     default_parallelism: int,
+    compiles_per_pass: list[int],
+    compiles_per_query: dict[str, int],
+    pinned_compiles: int,
 ) -> tuple[dict, dict]:
     """Assemble the two emitted bench records from measured inputs —
     the big full-map record and the compact growth-invariant gate
@@ -254,7 +260,13 @@ def build_records(
     both records must carry the self-reported host bracket and the
     session's master and default parallelism (the cores the run
     actually used), the gate record must stay pinned-set-based (suite
-    growth cannot move it), and the two must agree on the totals."""
+    growth cannot move it), and the two must agree on the totals.
+
+    Codegen compiles are misses of Spark's generated-code cache: a warm
+    pass should add few. The full record carries the count of each
+    measured pass and the per-query counts of the last pass; both
+    carry ``pinned_codegen_compiles``, the pinned set's compiles over
+    its measured passes."""
     total = round(sum(times.values()), 3)
     pinned_total = round(sum(pinned_times.values()), 3)
     common = {
@@ -266,6 +278,7 @@ def build_records(
         "agg": "median",
         "pinned_set": "v1",
         "pinned_seconds": pinned_total,
+        "pinned_codegen_compiles": pinned_compiles,
         "host": host,
         "master": master,
         "defaultParallelism": default_parallelism,
@@ -275,6 +288,8 @@ def build_records(
         "value": total,
         "queries": times,
         "pinned_queries": pinned_times,
+        "codegen_compiles_per_pass": compiles_per_pass,
+        "codegen_compiles_per_query": compiles_per_query,
         **common,
     }
     # growth-invariant gate record: measured first in the session over
@@ -352,13 +367,16 @@ def main() -> None:
     # queries; the median cancels it in both directions
     passes = 3
 
-    def bench_set(names: list[str]) -> dict[str, float]:
-        # warm-up pass first: JIT-compile the generated code, load
-        # parquet footers, warm the Python workers — then measure
+    def bench_set(names: list[str]) -> tuple[dict[str, float], list[int], dict[str, int]]:
+        """(median seconds per query, codegen compiles per measured
+        pass, compiles per query in the last pass)."""
+        # warm-up pass first: compile and cache the generated code,
+        # load parquet footers, warm the Python workers — then measure
         # steady state (what a long-running cluster job actually sees)
         for name in names:
             run_query(registry.QUERIES[name], spark, sf_dir)
         samples: dict[str, list[float]] = {name: [] for name in names}
+        per_pass: list[int] = []
         for _ in range(passes):
             # VERDICT r14 item 6: persisted frames inside queries (BFS
             # levels, zorder grid, CC labels) register in the
@@ -368,23 +386,32 @@ def main() -> None:
             # cost. Clear between passes (localCheckpoints are not in
             # the CacheManager and never cross runs).
             spark.catalog.clearCache()
+            per_query: dict[str, int] = {}
             for name in names:
+                before = codegen_compiles(spark)
                 samples[name].append(
                     run_query(registry.QUERIES[name], spark, sf_dir)
                 )
-        return {
+                per_query[name] = codegen_compiles(spark) - before
+            per_pass.append(sum(per_query.values()))
+        medians = {
             name: round(sorted(ts)[len(ts) // 2], 3)
             for name, ts in samples.items()
         }
+        return medians, per_pass, per_query
 
     # Phase 1 — the FROZEN pinned subset, always the session's first
     # work: its numbers are comparable round-over-round regardless of
     # how much the headline suite grows behind it.
-    pinned_times = bench_set(PINNED_V1)
+    pinned_times, pinned_passes, pinned_last = bench_set(PINNED_V1)
     # Phase 2 — the rest of the headline suite; the full record is the
     # union (pinned queries keep their phase-1, fixed-position times).
-    rest_times = bench_set([n for n in HEADLINE if n not in set(PINNED_V1)])
+    # Pass k of the full map is pass k of each phase.
+    rest_times, rest_passes, rest_last = bench_set(
+        [n for n in HEADLINE if n not in set(PINNED_V1)]
+    )
     times = {name: (pinned_times | rest_times)[name] for name in HEADLINE}
+    last_pass_compiles = pinned_last | rest_last
 
     # re-anchor after the suite: a quiet start + inflated end (or vice
     # versa) localizes WHEN the contention hit within the run
@@ -397,6 +424,9 @@ def main() -> None:
         host=host,
         master=spark.sparkContext.master,
         default_parallelism=spark.sparkContext.defaultParallelism,
+        compiles_per_pass=[a + b for a, b in zip(pinned_passes, rest_passes)],
+        compiles_per_query={name: last_pass_compiles[name] for name in HEADLINE},
+        pinned_compiles=sum(pinned_passes),
     )
     # Full record FIRST: the complete per-query map, for humans and
     # for cross-round full-subset comparison when the whole stdout is

@@ -24,11 +24,11 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_llm_spark.io import hadoop_path
+from mapreduce_llm_spark.session import get_spark
 
 CACHE_SCHEMA = "cache_key string, result string"
 
@@ -67,8 +67,10 @@ def append_cache(results: DataFrame, cache_dir: str) -> None:
 
 def clean_cache(cache_dir: str) -> None:
     """Drop the cache (reference CleanCache,
-    internal/cli/mapreduce.go:265-281); no-op when absent."""
-    fs, path = hadoop_path(SparkContext.getOrCreate(), cache_dir)
+    internal/cli/mapreduce.go:265-281); no-op when absent. The context
+    comes from ``get_spark``: a bare one started here would lack the
+    engine's defaults, and every later ``get_spark`` would build on it."""
+    fs, path = hadoop_path(get_spark().sparkContext, cache_dir)
     fs.delete(path, True)
 
 

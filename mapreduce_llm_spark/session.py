@@ -18,6 +18,12 @@ parent directory goes first on their ``PYTHONPATH``
 (``spark.executorEnv.PYTHONPATH``, merged with the driver's own
 ``PYTHONPATH``); without it a driver started outside the repository
 with no ``PYTHONPATH`` would fail every Python task.
+
+Spark compiles generated Java for every stage and expression and keeps
+the compiled classes in one LRU cache per JVM. The session sizes that
+cache (``CODEGEN_CACHE_ENTRIES``) so a warm query reuses its classes
+instead of recompiling them; :func:`codegen_compiles` reads how many
+classes the JVM has compiled so far.
 """
 
 from __future__ import annotations
@@ -25,6 +31,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Generated classes Spark keeps compiled per JVM
+# (spark.sql.codegen.cache.maxEntries, default 100). A warm pass of
+# perfbench's analytic mix uses 121 classes and one of bench.py's
+# 122-query map 2,114, so at 100 every warm pass evicted and recompiled
+# all of them (6.5 ms each on average). 4096 is about twice the largest
+# working set measured, at ~8 KB of metaspace per class (~32 MB per JVM
+# when full).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _worker_pythonpath() -> str:
@@ -63,6 +78,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mapreduce_llm_spark/warehouse"),
@@ -106,3 +122,11 @@ def get_spark(
                 )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled in the session's JVM so far (Spark's
+    ``CodegenMetrics`` compilation count). A compile is a miss of the
+    generated-code cache, so a warm query should add none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

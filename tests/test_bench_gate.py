@@ -204,9 +204,13 @@ def test_bench_records_self_report_host_state():
         host=host,
         master="local[4]",
         default_parallelism=4,
+        compiles_per_pass=[5, 0],
+        compiles_per_query={"q_a": 0, "q_b": 0, "q_c": 0},
+        pinned_compiles=3,
     )
     for rec in (full, gate):
         assert rec["master"] == "local[4]" and rec["defaultParallelism"] == 4
+        assert rec["pinned_codegen_compiles"] == 3
         assert rec["host"] is host
         assert set(rec["host"]) == {"start", "end"}
         assert set(rec["host"]["start"]) == {"cpu_anchor_md5_2m_s", "loadavg"}
@@ -218,11 +222,17 @@ def test_bench_records_self_report_host_state():
     assert full["pinned_seconds"] == gate["pinned_seconds"] == 2.0
     assert gate["queries"] == pinned
     assert full["queries"] == times and full["pinned_queries"] == pinned
+    # the full record carries each measured pass's compiles and the last
+    # pass's per-query counts; the compact gate record only the integer
+    assert full["codegen_compiles_per_pass"] == [5, 0]
+    assert full["codegen_compiles_per_query"] == {"q_a": 0, "q_b": 0, "q_c": 0}
+    assert not {"codegen_compiles_per_pass", "codegen_compiles_per_query"} & set(gate)
 
 
 def test_load_bench_parses_records_with_and_without_parallelism(tmp_path):
-    """The master/defaultParallelism keys are additions only: a record
-    from before them and one with them both load and gate."""
+    """The master/defaultParallelism and codegen-compile keys are
+    additions only: a record from before them and one with them both
+    load and gate."""
     import bench
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -236,6 +246,9 @@ def test_load_bench_parses_records_with_and_without_parallelism(tmp_path):
         host={},
         master="local[4]",
         default_parallelism=4,
+        compiles_per_pass=[0, 0, 0],
+        compiles_per_query={q: 0 for q in old["queries"]},
+        pinned_compiles=0,
     )
     p = tmp_path / "bench_stdout.txt"
     # bench.py's stdout: the full line, blank padding, the compact gate line
@@ -243,6 +256,11 @@ def test_load_bench_parses_records_with_and_without_parallelism(tmp_path):
         json.dumps(full) + "\n" * 4096 + json.dumps(gate_rec, separators=(",", ":")) + "\n"
     )
     new = load_bench(str(p))
+    assert "pinned_codegen_compiles" not in old
+    assert new["pinned_codegen_compiles"] == 0
+    full_only = tmp_path / "bench_full.json"
+    full_only.write_text(json.dumps(full))
+    assert load_bench(str(full_only))["codegen_compiles_per_pass"] == [0, 0, 0]
     assert new["defaultParallelism"] == 4 and new["master"] == "local[4]"
     assert new["queries"] == old["queries"]
     ok, msg = gate(old, new, max_ratio=1.15)
